@@ -120,9 +120,9 @@ object ManifestTable {
     * (may hold) — conservative: the rewrites decline, plain scans
     * serve. */
   /** `sorted` (format 12) records that the file was written CLUSTER-
-    * SORTED by the layout's cluster expression ([[writeClusteredBuckets]]
-    * — clusterBy, zOrderBy, recluster). It is the per-file DRIFT signal
-    * [[recluster]] reads: every other writer (merge, delta, compact,
+    * SORTED by the layout's cluster expression ([[writeBuckets]] with a
+    * cluster layout — clusterBy, zOrderBy, recluster). It is the
+    * per-file DRIFT signal [[recluster]] reads: every other writer (merge, delta, compact,
     * DML rewrites) produces `sorted = false` entries, so "this bucket
     * needs a layout refresh" is a pure manifest fact — no data read,
     * no extra bookkeeping commit. Legacy entries parse as false
@@ -183,10 +183,9 @@ object ManifestTable {
     * rewrites those fields and remaps the logical name onto the
     * unchanged physical one. Exactly two places translate: the scan
     * ([[GraftScan.frame]] reads files under physical names and aliases
-    * back) and the bucket writers ([[writeBuckets]] /
-    * [[writeClusteredBuckets]] rename to physical just before the
-    * parquet write) — the Delta-Lake column-mapping trick, name-mapping
-    * flavor. */
+    * back) and the one bucket writer ([[writeBuckets]] renames to
+    * physical just before the parquet write) — the Delta-Lake
+    * column-mapping trick, name-mapping flavor. */
   /** `splits` (format 13) is the ONLINE BUCKET-SPLIT tree: the set of
     * split NODES as (value, depth) pairs. Bucket ids form a binary trie
     * per creation-time bucket: the root of parent `b` is node (b, 0);
@@ -248,6 +247,11 @@ object ManifestTable {
     * before the commit-point rename — specs interleave a competing
     * committer here to exercise the OCC conflict path deterministically. */
   private[graft] var testBeforeCommit: () => Unit = () => ()
+
+  /** Test seam: when set, [[writeBuckets]] drops its write's observed
+    * stats, so specs drive the readback fallback and check its entries
+    * against the observed path's. */
+  private[graft] var testDropObservation: Boolean = false
 
   /** Highest committed manifest version, if any. Commit = the renamed
     * `m<version>` file exists; there is no torn state to filter because
@@ -1079,12 +1083,24 @@ object ManifestTable {
       if (fs.exists(p)) fs.delete(p, true)
     }
 
-  /** Writes `df`'s rows bucketed under `data/<dataDirName>` (one file per
-    * bucket) and returns the FileEntry per written bucket, stats read
-    * back from the committed files. `numTasks` sizes the write exchange
-    * to the buckets actually being written — a micro-batch touching 3
-    * buckets runs 3 write tasks, a full-table bootstrap runs one per
-    * bucket — so task count tracks touched data, not a global setting. */
+  /** Writes `df`'s rows bucketed under `data/<dataDirName>` and returns
+    * one FileEntry per written file, its stats observed inside the write
+    * job. This is the ONE funnel every bucket-writing operation shares —
+    * create, replace, merge, the DML rewrites and the layout rewrites
+    * (clusterBy, zOrderBy, recluster). `numTasks` sizes the write
+    * exchange to the data actually being written, and `cluster` picks
+    * the layout:
+    * - None: a hash exchange on the bucket — a micro-batch touching 3
+    *   buckets runs 3 write tasks, a full-table bootstrap one per
+    *   bucket — and each bucket is ONE key-sorted file.
+    * - Some(c): `repartitionByRange(numTasks, bucket, c)`. The split
+    *   needs no quantile pass: the exchange samples its own boundaries,
+    *   partitions are contiguous in (bucket, c) order, and the
+    *   `partitionBy(bucket)` write cuts any bucket-spanning partition at
+    *   the bucket edge — so within a bucket, file c-ranges are disjoint
+    *   by construction, which is exactly what per-file zone maps need
+    *   to prune. Its entries are `sorted`, the drift signal
+    *   [[recluster]] reads. */
   private def writeBuckets(
       df: DataFrame,
       bucket: org.apache.spark.sql.Column,
@@ -1095,7 +1111,8 @@ object ManifestTable {
       keyComparator: org.apache.spark.sql.Column => org.apache.spark.sql.Column =
         identity,
       seq: Long = 0L,
-      colMap: Seq[(String, String)] = Nil): Seq[FileEntry] = {
+      colMap: Seq[(String, String)] = Nil,
+      cluster: Option[org.apache.spark.sql.Column] = None): Seq[FileEntry] = {
     val spark = df.sparkSession
     val dataDir = s"$root/data/$dataDirName"
     // Column mapping: files ALWAYS store the physical names, so a
@@ -1142,6 +1159,9 @@ object ManifestTable {
     // so GraftFileIndex can prune numeric BETWEEN/>/< at plan time.
     // Computed INSIDE the write job via observe ([[WriteStatsAgg]]):
     // no post-commit readback job, no re-read of the bytes just written.
+    // Both aggregates group by FILE: `maxRecordsPerFile` is off and each
+    // task's rows arrive sorted by bucket, so every (task, bucket) pair
+    // is exactly one part file ([[WriteStatsAgg.fileKey]]).
     val kc = col(keyColumn)
     val norm = keyComparator(kc)
     // normalized key TYPE: identity comparators (`f(c) eq c` — the
@@ -1166,14 +1186,19 @@ object ManifestTable {
     // bytes just written (guide §6 — the WriteStatsAgg discipline
     // extended to the zone sidecars). Policy lookup is one fs.exists on
     // undeclared tables and a fingerprint-memoized read on declared
-    // ones. Best-effort: any failure just skips the offers and the
-    // build falls back to its scan.
+    // ones. Best-effort: a failure only skips the offers, and the build
+    // falls back to its scan.
     val zoneOfferCols: Seq[(String, String)] =
       try maintenanceOf(spark, root).toSeq.flatMap(_.zones).distinct
         .filter(df.columns.contains)
         .flatMap(c => scala.util.Try(
           ZoneSkip.kindOf(df.schema(c).dataType)).toOption.map(c -> _))
-      catch { case scala.util.control.NonFatal(_) => Nil }
+      catch {
+        case scala.util.control.NonFatal(e) =>
+          storeLog.warn(s"graft write at $root: zone policy lookup " +
+            "failed, zone sidecars will be rebuilt by a scan", e)
+          Nil
+      }
     val zstatsCol =
       if (zoneOfferCols.isEmpty) Nil
       else Seq(B.column(ZoneStatsAgg(
@@ -1182,150 +1207,181 @@ object ManifestTable {
             ZoneSkip.rendered(col(c), df.schema(c).dataType)) },
           zoneOfferCols.map(p => ZoneSkip.kindCode(p._2)))
         .toAggregateExpression()).as("zstats"))
-    // Key-sorted within each bucket file: parquet row-group min/max stats
-    // then stratify the key space, so the pruned point lookups (which
-    // always carry the key predicate into the scan) skip row groups
-    // within a file, not just files — and sorted columns compress better.
-    // Costs one in-task sort at write; changes no semantics (readers
-    // never assume order).
-    graft.helpers.JobLabel.withDesc(spark, s"graft.write $dataDir") {
-      physicalize(guarded.withColumn(BucketCol, bucket)
-        .repartition(math.max(1, numTasks), col(BucketCol))
-        .sortWithinPartitions(col(BucketCol),
-          keyComparator(col(keyColumn)))
-        .observe(obs, statsCol, zstatsCol: _*))
-        .write.partitionBy(BucketCol).mode("overwrite").parquet(dataDir)
+    // Sorted within each file — by the key on the hash layout, so
+    // parquet row-group min/max stats stratify the key space and the
+    // pruned point lookups skip row groups within a file, not just
+    // files (and sorted columns compress better); by the cluster
+    // expression on a cluster layout. Costs one in-task sort at write;
+    // changes no semantics (readers never assume order).
+    val bucketed = guarded.withColumn(BucketCol, bucket)
+    val laidOut = cluster match {
+      case None =>
+        bucketed.repartition(math.max(1, numTasks), col(BucketCol))
+          .sortWithinPartitions(col(BucketCol), norm)
+      case Some(c) =>
+        bucketed.repartitionByRange(math.max(1, numTasks), col(BucketCol), c)
+          .sortWithinPartitions(col(BucketCol), c)
     }
-    // Stamp each bucket's (single) part file with Spark's bucket-id name
-    // suffix (`_<bucket>%05d` before the first extension dot — the exact
+    graft.helpers.JobLabel.withDesc(spark, s"graft.write $dataDir") {
+      physicalize(laidOut.observe(obs, statsCol, zstatsCol: _*))
+        .write.partitionBy(BucketCol).option("maxRecordsPerFile", 0L)
+        .mode("overwrite").parquet(dataDir)
+    }
+    // Stamp every part file with Spark's bucket-id name suffix
+    // (`_<bucket>%05d` before the first extension dot — the exact
     // convention `BucketingUtils` parses) and capture its byte size:
     // bucket-id names let the read side report a real `BucketSpec`
-    // (co-bucketed joins and groupBy(key) with no Exchange), and
-    // manifest-recorded file paths + sizes let scan PLANNING synthesize
-    // its FileStatuses from the manifest alone — zero listStatus calls
-    // against a 400k-bucket table (GraftFileIndex). The rename is a
-    // metadata op on HDFS/ABFS-class stores; on raw S3 it is a copy —
-    // front the table with a rename-capable store, as the manifest
-    // commit already requires. A bucket that unexpectedly holds several
-    // part files (never written by this code) stays directory-granular
-    // and unnamed, which simply forfeits the two optimizations.
+    // (co-bucketed joins and groupBy(key) with no Exchange; many files
+    // per bucket is the normal bucketed-table shape, so clustering keeps
+    // it), and manifest-recorded file paths + sizes let scan PLANNING
+    // synthesize its FileStatuses from the manifest alone — zero
+    // listStatus calls against a 400k-bucket table (GraftFileIndex). The
+    // rename is a metadata op on HDFS/ABFS-class stores; on raw S3 it is
+    // a copy — front the table with a rename-capable store, as the
+    // manifest commit already requires. A failed rename keeps the
+    // unstamped name AND forfeits the entry's `named` claim: named=true
+    // on an unstamped file would make GraftScan report a BucketSpec
+    // whose bucketed read throws "Invalid bucket file" on that name.
     val dataPath = new Path(dataDir)
     val fs = fsOf(spark, dataPath)
-    def stampBucket(d: org.apache.hadoop.fs.FileStatus)
-        : (Int, (String, Long, Boolean)) = {
+    def stampBucket(d: org.apache.hadoop.fs.FileStatus): Seq[WrittenFile] = {
       val k = d.getPath.getName.stripPrefix(s"$BucketCol=").toInt
-      val parts = fs.listStatus(d.getPath).toSeq.filter(s => s.isFile &&
-        !s.getPath.getName.startsWith("_") &&
-        !s.getPath.getName.startsWith("."))
       val relDir = s"data/$dataDirName/$BucketCol=$k"
-      parts match {
-        case Seq(one) =>
-          val name = one.getPath.getName
+      fs.listStatus(d.getPath).toSeq.filter(s => s.isFile &&
+          !s.getPath.getName.startsWith("_") &&
+          !s.getPath.getName.startsWith("."))
+        .map { f =>
+          val name = f.getPath.getName
           val dot = name.indexOf('.')
           val stamped =
             if (dot < 0) f"${name}_$k%05d"
             else f"${name.substring(0, dot)}_$k%05d${name.substring(dot)}"
-          val dst = new Path(d.getPath, stamped)
-          if (fs.rename(one.getPath, dst))
-            k -> (s"$relDir/$stamped", one.getLen, true)
-          else k -> (relDir, one.getLen, false)
-        case many =>
-          k -> (relDir, many.map(_.getLen).sum, false)
-      }
-    }
-    val perBucket: Map[Int, (String, Long, Boolean)] =
-      if (!fs.exists(dataPath)) Map.empty
-      else {
-        val dirs = fs.listStatus(dataPath).toSeq
-          .filter(s => s.isDirectory &&
-            s.getPath.getName.startsWith(s"$BucketCol="))
-        // The list+stamp loop is driver-side metadata RPC: ~nothing for
-        // an incremental merge's few touched buckets, but a bootstrap/
-        // rebucket touches EVERY bucket (400k at 100 TB) — run it on a
-        // bounded pool so the commit isn't serialized on FS latency.
-        if (dirs.size <= 64) dirs.map(stampBucket).toMap
-        else {
-          val pool = java.util.concurrent.Executors.newFixedThreadPool(32)
-          try {
-            import scala.jdk.CollectionConverters._
-            pool.invokeAll(dirs.map(d =>
-                new java.util.concurrent.Callable[(Int, (String, Long, Boolean))] {
-                  override def call() = stampBucket(d)
-                }).asJava)
-              .asScala.map(_.get()).toMap
-          } finally pool.shutdown()
+          if (fs.rename(f.getPath, new Path(d.getPath, stamped)))
+            WrittenFile(k, stamped, s"$relDir/$stamped", f.getLen, true)
+          else WrittenFile(k, name, s"$relDir/$name", f.getLen, false)
         }
+    }
+    val dirs =
+      if (!fs.exists(dataPath)) Nil
+      else fs.listStatus(dataPath).toSeq.filter(s => s.isDirectory &&
+        s.getPath.getName.startsWith(s"$BucketCol="))
+    // The list+stamp loop is driver-side metadata RPC: ~nothing for an
+    // incremental merge's few touched buckets, but a bootstrap/rebucket
+    // touches EVERY bucket (400k at 100 TB) — run it on a bounded pool
+    // so the commit isn't serialized on FS latency.
+    val files: Seq[WrittenFile] =
+      if (dirs.size <= 64) dirs.flatMap(stampBucket)
+      else {
+        val pool = java.util.concurrent.Executors.newFixedThreadPool(32)
+        try {
+          import scala.jdk.CollectionConverters._
+          pool.invokeAll(dirs.map(d =>
+              new java.util.concurrent.Callable[Seq[WrittenFile]] {
+                override def call() = stampBucket(d)
+              }).asJava)
+            .asScala.flatMap(_.get()).toSeq
+        } finally pool.shutdown()
       }
-    // The write's observed metrics arrive via QueryExecutionListener a
-    // beat after the action returns; the bounded poll below covers that
-    // gap. The fs-stamping loop above already absorbed most of it.
-    val obsRow = WriteStats.awaitRow(obs)
-    // Park write-time zone offers for the post-commit sidecar build
-    // (best-effort: a lost race's relPaths never match a live entry).
-    if (zoneOfferCols.nonEmpty) obsRow.foreach { r =>
-      try {
-        val z = ZoneStatsAgg.decode(r.get(r.fieldIndex("zstats")))
-        val rows = z.toSeq.flatMap { case (k64, triples) =>
-          perBucket.get(k64.toInt).toSeq.flatMap {
-            case (relPath, _, _) =>
-              zoneOfferCols.zip(triples).map {
-                case ((c, kind), (mn, mx, nn)) =>
-                  org.apache.spark.sql.Row(relPath, c, kind, mn, mx, nn)
-              }
+    // Observed group -> committed file, through the writer's task id in
+    // the part-file name. Sound only when every file parses and the
+    // mapping is a bijection with the observed groups; anything else
+    // takes the readback below — old cost, never a wrong manifest.
+    val byGroup: Map[Long, WrittenFile] = files.flatMap(f =>
+      partIdOf(f.name).map(t => WriteStatsAgg.fileKey(t, f.bucket) -> f))
+      .toMap
+    val obsRow = if (testDropObservation) None else WriteStats.awaitRow(obs)
+    val observed: Either[String, Map[Long, WriteStatsAgg.Group]] =
+      obsRow.toRight("the write's observed stats never arrived")
+        .flatMap(r => scala.util.Try(
+            WriteStatsAgg.decode(r.get(r.fieldIndex("stats"))))
+          .toEither.left.map(e => s"undecodable observed stats ($e)"))
+        .filterOrElse(g => byGroup.size == files.size &&
+            g.keySet == byGroup.keySet,
+          "observed stats do not map one-to-one onto the written files")
+    observed match {
+      case Right(groups) =>
+        // Park write-time zone offers for the post-commit sidecar build
+        // (best-effort: a lost race's relPaths never match a live entry).
+        if (zoneOfferCols.nonEmpty) obsRow.foreach { r =>
+          try {
+            val z = ZoneStatsAgg.decode(r.get(r.fieldIndex("zstats")))
+            ZoneSkip.offerZones(root, z.toSeq.flatMap { case (g, triples) =>
+              byGroup.get(g).toSeq.flatMap(f => zoneOfferCols.zip(triples)
+                .map { case ((c, kind), (mn, mx, nn)) =>
+                  org.apache.spark.sql.Row(f.relPath, c, kind, mn, mx, nn)
+                })
+            })
+          } catch {
+            case scala.util.control.NonFatal(e) =>
+              storeLog.warn(s"graft write at $root: undecodable zone " +
+                "offers, zone sidecars will be rebuilt by a scan", e)
           }
         }
-        ZoneSkip.offerZones(root, rows)
-      } catch { case scala.util.control.NonFatal(_) => () }
+        groups.toSeq.map { case (g, st) =>
+          val f = byGroup(g)
+          FileEntry(f.bucket, st.rows, st.minKey, st.maxKey, f.relPath, seq,
+            f.bytes, f.named, st.minZ, st.maxZ, nullKeys = st.nullK,
+            sorted = cluster.isDefined)
+        }
+      case Left(why) =>
+        // The readback of the committed files, per file. Explicit schema
+        // (+ the partition column) so an all-rows-rejected empty write
+        // doesn't fail schema inference; physical names on disk, back
+        // to LOGICAL names for the stats frame (a recorded keyExpr
+        // comparator resolves logically).
+        storeLog.warn(s"graft write at $root: $why; reading the " +
+          s"${files.size} written files back for their stats")
+        val writtenSchema = org.apache.spark.sql.types.StructType(
+          df.schema.fields.zip(physNames).map { case (f, p) =>
+            f.copy(name = p) } :+ org.apache.spark.sql.types.StructField(
+            BucketCol, org.apache.spark.sql.types.IntegerType))
+        val rbRaw = spark.read.schema(writtenSchema)
+          .option("basePath", dataDir).parquet(dataDir)
+        val rb =
+          if (colMap.isEmpty) rbRaw
+          else rbRaw.select((df.schema.fieldNames.toSeq.zip(physNames).map {
+            case (n, p) => col(p).as(n) } :+ col(BucketCol)): _*)
+        val zoneAggs = zoneCol.toSeq.flatMap(zr =>
+          Seq(min(zr).cast("string").as("minZ"),
+            max(zr).cast("string").as("maxZ")))
+        val byName = files.map(f => (f.bucket, f.name) -> f).toMap
+        rb.groupBy(col(BucketCol),
+            substring_index(input_file_name(), "/", -1))
+          .agg(count(lit(1)).as("rows"),
+            (Seq(min(norm.cast("string")).as("minKey"),
+              max(norm.cast("string")).as("maxKey")) ++ zoneAggs :+
+              max(when(kc.isNull || norm.isNull, lit(1)).otherwise(lit(0)))
+                .as("nullK")): _*)
+          .collect().toSeq
+          .flatMap { r =>
+            def str(c: String): String =
+              if (!r.schema.fieldNames.contains(c)) ""
+              else Option(r.getAs[String](c)).getOrElse("")
+            byName.get((r.getInt(0), r.getString(1))).map(f =>
+              FileEntry(f.bucket, r.getAs[Long]("rows"), str("minKey"),
+                str("maxKey"), f.relPath, seq, f.bytes, f.named,
+                str("minZ"), str("maxZ"),
+                nullKeys = r.getAs[Int]("nullK") == 1,
+                sorted = cluster.isDefined))
+          }
     }
-    obsRow.map(r => WriteStatsAgg.decode(r.get(r.fieldIndex("stats"))))
-      .map { groups =>
-      groups.toSeq.map { case (k64, g) =>
-        val k = k64.toInt
-        val (relPath, bytes, named) = perBucket.getOrElse(k,
-          (s"data/$dataDirName/$BucketCol=$k", 0L, false))
-        FileEntry(k, g.rows, g.minKey, g.maxKey, relPath, seq, bytes,
-          named, g.minZ, g.maxZ, nullKeys = g.nullK)
-      }
-    }.getOrElse {
-      // Fallback (metrics never delivered — never seen in practice):
-      // the pre-fusion readback of the committed files, kept verbatim
-      // so a missed observation degrades to the old cost, not to a
-      // wrong manifest. Explicit schema (+ the partition column) so an
-      // all-rows-rejected empty write doesn't fail schema inference;
-      // physical names on disk, back to LOGICAL names for the stats
-      // frame (a recorded keyExpr comparator resolves logically).
-      val writtenSchema = org.apache.spark.sql.types.StructType(
-        df.schema.fields.zip(physNames).map { case (f, p) =>
-          f.copy(name = p) } :+ org.apache.spark.sql.types.StructField(
-          BucketCol, org.apache.spark.sql.types.IntegerType))
-      val rbRaw = spark.read.schema(writtenSchema)
-        .option("basePath", dataDir).parquet(dataDir)
-      val rb =
-        if (colMap.isEmpty) rbRaw
-        else rbRaw.select((df.schema.fieldNames.toSeq.zip(physNames).map {
-          case (n, p) => col(p).as(n) } :+ col(BucketCol)): _*)
-      val zoneAggs = zoneCol.toSeq.flatMap(zr =>
-        Seq(min(zr).cast("string").as("minZ"),
-          max(zr).cast("string").as("maxZ")))
-      val nullAgg = max(when(kc.isNull || norm.isNull, lit(1))
-        .otherwise(lit(0))).as("nullK")
-      rb.groupBy(col(BucketCol))
-        .agg(count(lit(1)).as("rows"),
-          (Seq(min(norm.cast("string")).as("minKey"),
-            max(norm.cast("string")).as("maxKey")) ++ zoneAggs :+ nullAgg): _*)
-        .collect()
-        .map { r =>
-          val k = r.getInt(0)
-          val (relPath, bytes, named) = perBucket.getOrElse(k,
-            (s"data/$dataDirName/$BucketCol=$k", 0L, false))
-          FileEntry(k, r.getLong(1),
-            Option(r.getString(2)).getOrElse(""),
-            Option(r.getString(3)).getOrElse(""),
-            relPath, seq, bytes, named,
-            if (zoneAggs.isEmpty) "" else Option(r.getString(4)).getOrElse(""),
-            if (zoneAggs.isEmpty) "" else Option(r.getString(5)).getOrElse(""),
-            nullKeys = r.getInt(if (zoneAggs.isEmpty) 4 else 6) == 1)
-        }.toSeq
+  }
+
+  /** A part file [[writeBuckets]] committed, after its bucket-id stamp. */
+  private final case class WrittenFile(
+      bucket: Int, name: String, relPath: String, bytes: Long, named: Boolean)
+
+  /** The write task id in a Spark part-file name, `part-<task>-<job>…`:
+    * the task is formatted `%05d`, so it is five OR MORE digits, read
+    * up to the next dash. The bucket-id stamp appends before the first
+    * dot and leaves the prefix intact. */
+  private[graft] def partIdOf(name: String): Option[Int] = {
+    val end = name.indexOf('-', 5)
+    if (!name.startsWith("part-") || end < 0) None
+    else {
+      val digits = name.substring(5, end)
+      if (digits.isEmpty || !digits.forall(c => c >= '0' && c <= '9')) None
+      else digits.toIntOption
     }
   }
 
@@ -1567,8 +1623,8 @@ object ManifestTable {
       val committed =
         try {
           // 4-5. write ONLY the touched buckets under this attempt's
-          //    directory (one file per bucket), compute their stats from
-          //    the committed files in one bounded agg, then the atomic
+          //    directory (one file per bucket, its stats observed inside
+          //    the write job — [[writeBuckets]]), then the atomic
           //    no-overwrite manifest swap. In delta mode just the batch's
           //    own post-merge rows are written (the semi-join keeps the
           //    batch-key rows of the merged fragment; Catalyst broadcasts
@@ -1709,7 +1765,7 @@ object ManifestTable {
       } else None
     }
 
-  private val maintainLog =
+  private val storeLog =
     org.slf4j.LoggerFactory.getLogger("graft.store.ManifestTable")
 
   private val MaintainSchema = org.apache.spark.sql.types.StructType(Seq(
@@ -2141,7 +2197,7 @@ object ManifestTable {
             try SecondaryIndex.refresh(spark, ix)
             catch {
               case scala.util.control.NonFatal(e) =>
-                maintainLog.warn(s"declared index maintenance failed " +
+                storeLog.warn(s"declared index maintenance failed " +
                   s"for ${ix.indexRoot} at $root v${m.version}: $e")
             }
           }
@@ -2150,7 +2206,7 @@ object ManifestTable {
               try MaterializedView.refresh(spark, v)
               catch {
                 case scala.util.control.NonFatal(e) =>
-                  maintainLog.warn(s"declared view maintenance failed " +
+                  storeLog.warn(s"declared view maintenance failed " +
                     s"for ${v.viewRoot} at $root v${m.version}: $e")
               }
             }
@@ -2185,7 +2241,7 @@ object ManifestTable {
       }
     } catch {
       case scala.util.control.NonFatal(e) =>
-        maintainLog.warn(s"graft sidecar maintenance failed at " +
+        storeLog.warn(s"graft sidecar maintenance failed at " +
           s"$root v${m.version} (commit unaffected; sidecars are " +
           s"advisory): $e")
     }
@@ -3819,224 +3875,6 @@ object ManifestTable {
     }
   }
 
-  /** Cluster-layout variant of [[writeBuckets]]: same bucket
-    * assignment, but each bucket's rows SPLIT across multiple files,
-    * each holding a contiguous range of `clusterCol`. The split needs
-    * no quantile pass: `repartitionByRange(files, bucket, cluster)`
-    * samples its own boundaries, partitions are contiguous in
-    * (bucket, cluster) order, and the `partitionBy(bucket)` write cuts
-    * any bucket-spanning partition at the bucket edge — so within a
-    * bucket, file cluster-ranges are disjoint by construction, which
-    * is exactly what per-file zone maps need to prune. Every part
-    * file gets the Spark bucket-id name suffix (many files per bucket
-    * is the NORMAL bucketed-table shape, so the BucketSpec
-    * zero-Exchange property survives clustering); one FileEntry per
-    * part file, stats per file. */
-  private def writeClusteredBuckets(
-      df: DataFrame,
-      bucket: org.apache.spark.sql.Column,
-      keyColumn: String,
-      cluster: org.apache.spark.sql.Column,
-      root: String,
-      dataDirName: String,
-      numFiles: Int,
-      keyComparator: org.apache.spark.sql.Column => org.apache.spark.sql.Column =
-        identity,
-      seq: Long = 0L,
-      colMap: Seq[(String, String)] = Nil): Seq[FileEntry] = {
-    val spark = df.sparkSession
-    val dataDir = s"$root/data/$dataDirName"
-    // column mapping: physical names on disk (the writeBuckets rule)
-    def toPhys(name: String): String =
-      colMap.collectFirst { case (l, p) if l == name => p }.getOrElse(name)
-    val physNames = df.schema.fieldNames.toSeq.map(toPhys)
-    // Per-FILE stats observed INSIDE the write job (the writeBuckets
-    // fusion, file-granular): the group key is (partitionId << 32) |
-    // bucket — `partitionBy(bucket)` cuts each range partition at
-    // bucket edges, so one (task, bucket) pair is exactly one part
-    // file, recoverable from the writer's deterministic
-    // "part-<partitionId%05d>-…" naming. A mapping miss (renamed
-    // convention, maxRecordsPerFile splits) falls back to the
-    // pre-fusion readback of the committed files — old cost, never a
-    // wrong manifest.
-    val kc = col(keyColumn)
-    val norm = keyComparator(kc)
-    val normDt =
-      if (norm eq kc) df.schema(keyColumn).dataType
-      else df.limit(0).select(norm).schema.head.dataType
-    val zoneColE = ZoneSkip.keyRendered(norm, normDt)
-    val obs = org.apache.spark.sql.Observation()
-    val statsCol = B.column(WriteStatsAgg(
-        B.expression(col(BucketCol).cast("long")),
-        B.expression(norm.cast("string")),
-        B.expression(zoneColE.getOrElse(lit(null))),
-        B.expression(when(kc.isNull || norm.isNull, lit(1))
-          .otherwise(lit(0))),
-        pidKey = true)
-      .toAggregateExpression()).as("stats")
-    // Declared zone columns ride the same observe (the writeBuckets
-    // discipline) — decisive here: the cluster layouts exist FOR zone
-    // pruning, so their rewrites always have zones to rebuild.
-    val zoneOfferCols: Seq[(String, String)] =
-      try maintenanceOf(spark, root).toSeq.flatMap(_.zones).distinct
-        .filter(df.columns.contains)
-        .flatMap(c => scala.util.Try(
-          ZoneSkip.kindOf(df.schema(c).dataType)).toOption.map(c -> _))
-      catch { case scala.util.control.NonFatal(_) => Nil }
-    val zstatsCol =
-      if (zoneOfferCols.isEmpty) Nil
-      else Seq(B.column(ZoneStatsAgg(
-          B.expression(col(BucketCol).cast("long")),
-          zoneOfferCols.map { case (c, _) => B.expression(
-            ZoneSkip.rendered(col(c), df.schema(c).dataType)) },
-          zoneOfferCols.map(p => ZoneSkip.kindCode(p._2)),
-          pidKey = true)
-        .toAggregateExpression()).as("zstats"))
-    val sorted = df.withColumn(BucketCol, bucket)
-      .repartitionByRange(math.max(1, numFiles), col(BucketCol), cluster)
-      .sortWithinPartitions(col(BucketCol), cluster)
-      .observe(obs, statsCol, zstatsCol: _*)
-    graft.helpers.JobLabel.withDesc(spark, s"graft.write $dataDir") {
-      (if (colMap.isEmpty) sorted
-       else sorted.select((df.schema.fieldNames.toSeq.map(n =>
-         col(n).as(toPhys(n))) :+ col(BucketCol)): _*))
-        .write.partitionBy(BucketCol).mode("overwrite").parquet(dataDir)
-    }
-    val dataPath = new Path(dataDir)
-    val fs = fsOf(spark, dataPath)
-    // stamp EVERY part file with the bucket-id suffix; map the stamped
-    // NAME (uuid-unique across the write) to its entry skeleton. A
-    // failed rename keeps the unstamped name AND forfeits the entry's
-    // `named` claim (the writeBuckets discipline): recording named=true
-    // for an unstamped file would make GraftScan report a BucketSpec
-    // whose bucketed read throws "Invalid bucket file" on that name.
-    def stampBucket(d: org.apache.hadoop.fs.FileStatus)
-        : Seq[(String, (Int, String, Long, Boolean))] = {
-      val k = d.getPath.getName.stripPrefix(s"$BucketCol=").toInt
-      val relDir = s"data/$dataDirName/$BucketCol=$k"
-      fs.listStatus(d.getPath).toSeq.filter(s => s.isFile &&
-          !s.getPath.getName.startsWith("_") &&
-          !s.getPath.getName.startsWith("."))
-        .map { one =>
-          val name = one.getPath.getName
-          val dot = name.indexOf('.')
-          val stamped =
-            if (dot < 0) f"${name}_$k%05d"
-            else f"${name.substring(0, dot)}_$k%05d${name.substring(dot)}"
-          val dst = new Path(d.getPath, stamped)
-          if (fs.rename(one.getPath, dst))
-            stamped -> (k, s"$relDir/$stamped", one.getLen, true)
-          else name -> (k, s"$relDir/$name", one.getLen, false)
-        }
-    }
-    val dirs =
-      if (!fs.exists(dataPath)) Nil
-      else fs.listStatus(dataPath).toSeq.filter(s => s.isDirectory &&
-        s.getPath.getName.startsWith(s"$BucketCol="))
-    val byName: Map[String, (Int, String, Long, Boolean)] =
-      (if (dirs.size <= 64) dirs.flatMap(stampBucket)
-      else {
-        // the writeBuckets discipline: bounded pool for the metadata RPC
-        val pool = java.util.concurrent.Executors.newFixedThreadPool(32)
-        try {
-          import scala.jdk.CollectionConverters._
-          pool.invokeAll(dirs.map(d =>
-              new java.util.concurrent.Callable[Seq[(String, (Int, String, Long, Boolean))]] {
-                override def call() = stampBucket(d)
-              }).asJava)
-            .asScala.flatMap(_.get()).toSeq
-        } finally pool.shutdown()
-      }).toMap
-    // Group key → committed file, recovered from the writer's
-    // deterministic "part-<partitionId%05d>-<uuid>…" naming (the
-    // bucket-id stamp appends before the first dot, leaving the prefix
-    // intact). Sound only when every file parses and the mapping is a
-    // bijection with the observed groups — anything else falls back.
-    def pidOf(name: String): Option[Int] =
-      if (name.length > 10 && name.startsWith("part-") &&
-          name.charAt(10) == '-' &&
-          name.substring(5, 10).forall(_.isDigit))
-        Some(name.substring(5, 10).toInt)
-      else None
-    val byGroup: Seq[(Long, (Int, String, Long, Boolean))] =
-      byName.toSeq.flatMap { case (name, (k, relPath, len, stamped)) =>
-        pidOf(name).map(pid =>
-          ((pid.toLong << 32) | (k.toLong & 0xffffffffL)) ->
-            ((k, relPath, len, stamped)))
-      }
-    val groupIndex = byGroup.toMap
-    val obsRow = WriteStats.awaitRow(obs)
-    val fused: Option[Seq[FileEntry]] = obsRow.flatMap { r =>
-      try {
-        val groups = WriteStatsAgg.decode(r.get(r.fieldIndex("stats")))
-        if (byGroup.size != byName.size ||
-            groupIndex.size != byGroup.size ||
-            groups.keySet != groupIndex.keySet) None
-        else {
-          if (zoneOfferCols.nonEmpty) try {
-            val z = ZoneStatsAgg.decode(r.get(r.fieldIndex("zstats")))
-            val rows = z.toSeq.flatMap { case (g, triples) =>
-              groupIndex.get(g).toSeq.flatMap { case (_, relPath, _, _) =>
-                zoneOfferCols.zip(triples).map {
-                  case ((c, kind), (mn, mx, nn)) =>
-                    org.apache.spark.sql.Row(relPath, c, kind, mn, mx, nn)
-                }
-              }
-            }
-            ZoneSkip.offerZones(root, rows)
-          } catch { case scala.util.control.NonFatal(_) => () }
-          Some(groups.toSeq.map { case (g, st) =>
-            val (k, relPath, bytes, stamped) = groupIndex(g)
-            FileEntry(k, st.rows, st.minKey, st.maxKey, relPath, seq,
-              bytes, named = stamped, st.minZ, st.maxZ,
-              nullKeys = st.nullK,
-              sorted = true) // the format-12 drift signal: cluster-written
-          })
-        }
-      } catch { case scala.util.control.NonFatal(_) => None }
-    }
-    fused.getOrElse {
-      // Fallback (metrics missed or the name mapping failed): the
-      // pre-fusion readback of the committed files — old cost, never a
-      // wrong manifest. Per-FILE key stats (normalized space, the
-      // writeBuckets rule); logical names for the stats frame (a
-      // recorded keyExpr resolves by the logical name).
-      val writtenSchema = org.apache.spark.sql.types.StructType(
-        df.schema.fields.zip(physNames).map { case (f, p) =>
-          f.copy(name = p) } :+ org.apache.spark.sql.types.StructField(
-          BucketCol, org.apache.spark.sql.types.IntegerType))
-      val rbRaw = spark.read.schema(writtenSchema)
-        .option("basePath", dataDir).parquet(dataDir)
-      val rb =
-        if (colMap.isEmpty) rbRaw
-        else rbRaw.select((df.schema.fieldNames.toSeq.zip(physNames).map {
-          case (n, p) => col(p).as(n) } :+ col(BucketCol)): _*)
-      val zoneAggs = zoneColE.toSeq.flatMap(_ =>
-        ZoneSkip.keyRendered(norm, normDt).toSeq.flatMap(zr =>
-          Seq(min(zr).cast("string").as("minZ"),
-            max(zr).cast("string").as("maxZ"))))
-      val nullAgg = max(when(kc.isNull || norm.isNull, lit(1))
-        .otherwise(lit(0))).as("nullK")
-      rb.groupBy(substring_index(input_file_name(), "/", -1).as("_fn"))
-        .agg(count(lit(1)).as("rows"),
-          (Seq(min(norm.cast("string")).as("minKey"),
-            max(norm.cast("string")).as("maxKey")) ++ zoneAggs :+ nullAgg): _*)
-        .collect()
-        .flatMap { r =>
-          byName.get(r.getString(0)).map { case (k, relPath, bytes, stamped) =>
-            FileEntry(k, r.getLong(1),
-              Option(r.getString(2)).getOrElse(""),
-              Option(r.getString(3)).getOrElse(""),
-              relPath, seq, bytes, named = stamped,
-              if (zoneAggs.isEmpty) "" else Option(r.getString(4)).getOrElse(""),
-              if (zoneAggs.isEmpty) "" else Option(r.getString(5)).getOrElse(""),
-              nullKeys = r.getInt(if (zoneAggs.isEmpty) 4 else 6) == 1,
-              sorted = true) // the format-12 drift signal: cluster-written
-          }
-        }.toSeq
-    }
-  }
-
   /** Maintenance RE-CLUSTERING: rewrites the table's files ordered by
     * a chosen NON-KEY column, keeping the bucket layout (and so every
     * key-lookup/upsert/bucketed-join property) intact. This is what
@@ -4086,10 +3924,9 @@ object ManifestTable {
       val all = readManifestState(spark, root, schema, Some(prior))
       val cmp = effectiveKey(prior, keyComparator)
       val bucket = leafExpr(prior, cmp(col(keyColumn)))
-      val written = writeClusteredBuckets(all, bucket, keyColumn,
-        col(clusterCol), root, s"v$version-$attempt",
-        prior.numBuckets * filesPerBucket, cmp, seq = version,
-        colMap = prior.colMap)
+      val written = writeBuckets(all, bucket, keyColumn, root,
+        s"v$version-$attempt", prior.numBuckets * filesPerBucket, cmp,
+        seq = version, colMap = prior.colMap, cluster = Some(col(clusterCol)))
       if (tryCommitManifest(spark, root, Manifest(version,
           prior.numBuckets, written, prior.lastBatches, Some(token),
           attempt, keyColumn, prior.keyExpr, prior.lastCompact,
@@ -4167,10 +4004,9 @@ object ManifestTable {
         prior.entries.map(_.rows).sum, sampleRows, bits, seed = token)
       val cmp = effectiveKey(prior, keyComparator)
       val bucket = leafExpr(prior, cmp(col(keyColumn)))
-      val written = writeClusteredBuckets(all, bucket, keyColumn,
-        z, root, s"v$version-$attempt",
-        prior.numBuckets * filesPerBucket, cmp, seq = version,
-        colMap = prior.colMap)
+      val written = writeBuckets(all, bucket, keyColumn, root,
+        s"v$version-$attempt", prior.numBuckets * filesPerBucket, cmp,
+        seq = version, colMap = prior.colMap, cluster = Some(z))
       if (tryCommitManifest(spark, root, Manifest(version,
           prior.numBuckets, written, prior.lastBatches, Some(token),
           attempt, keyColumn, prior.keyExpr, prior.lastCompact,
@@ -4318,10 +4154,9 @@ object ManifestTable {
             touchedEntries.map(_.rows).sum, sampleRows, bits,
             seed = token)
         val bucket = leafExpr(prior, cmp(col(keyColumn)))
-        val written = writeClusteredBuckets(frag, bucket, keyColumn,
-          cluster, root, s"v$version-$attempt",
-          drifted.size * filesPerBucket, cmp, seq = version,
-          colMap = prior.colMap)
+        val written = writeBuckets(frag, bucket, keyColumn, root,
+          s"v$version-$attempt", drifted.size * filesPerBucket, cmp,
+          seq = version, colMap = prior.colMap, cluster = Some(cluster))
         if (tryCommitManifest(spark, root, Manifest(version,
             prior.numBuckets, untouched ++ written, batches,
             deleteToken, attempt, keyColumn, prior.keyExpr,

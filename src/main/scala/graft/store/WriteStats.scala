@@ -19,8 +19,8 @@ import org.apache.spark.unsafe.types.UTF8String
   * full scan of every committed file per commit: one extra table pass per
   * bootstrap/rebucket, one extra fragment pass per incremental merge.
   *
-  * Inputs per row: `key` — the group (bucket, or pid<<32|bucket for the
-  * clustered writer, where one file per (task, bucket) pair is written);
+  * Inputs per row: `key` — the row's bucket, grouped per FILE as
+  * [[WriteStatsAgg.fileKey]] (one file per (task, bucket) pair);
   * `normStr` — the normalized key rendered `cast(norm as string)`;
   * `zone` — the order-true numeric rendering ([[ZoneSkip.keyRendered]]),
   * LongType/DoubleType/NullType; `nullFlag` — 1 when the raw or
@@ -36,9 +36,10 @@ import org.apache.spark.unsafe.types.UTF8String
   *   `toString`, which is exactly Spark's `cast(long|double as string)`.
   * - rows/nullK replicate count(1) and max(flag).
   *
-  * The buffer is bounded by touched groups — buckets touched by the
-  * commit (≤ numBuckets) — the same cardinality the replaced
-  * `groupBy(bucket).agg(...).collect()` already shipped to the driver.
+  * The buffer is bounded by the files the write commits — one per
+  * touched bucket on the hash layout, ≤ the write's task count per
+  * bucket on a cluster layout — the same cardinality the per-file
+  * readback it replaces ships to the driver.
   *
   * Metrics ride Spark's accumulator path for observed metrics: in the
   * write job the aggregate sits in the RESULT stage (directly under the
@@ -47,29 +48,17 @@ import org.apache.spark.unsafe.types.UTF8String
   */
 /** Driver-side retrieval for [[WriteStatsAgg]] observations. */
 object WriteStats {
-  /** Waits (bounded) for the write's observed metrics and decodes the
-    * "stats" column. None only if the listener never delivered — the
-    * caller falls back to the pre-fusion readback, so a miss degrades
-    * to the old cost, never to a wrong manifest. The action has already
-    * completed when this is called; delivery is the listener thread's
-    * onSuccess, normally within a few ms. */
-  def awaitGroups(obs: org.apache.spark.sql.Observation,
-      timeoutMs: Long = 120000L): Option[Map[Long, WriteStatsAgg.Group]] =
-    awaitRow(obs, timeoutMs)
-      .map(r => WriteStatsAgg.decode(r.get(r.fieldIndex("stats"))))
-
-  /** The raw observed row, for callers reading several observed
-    * aggregates off one observation (key stats + zone stats). */
+  /** Waits (bounded) for the write's observed metrics row. None only if
+    * the listener never delivered — the caller falls back to the
+    * readback of the written files, so a miss degrades to the old cost,
+    * never to a wrong manifest. The action has already completed when
+    * this is called; delivery is the listener thread's onSuccess,
+    * normally within a few ms. */
   def awaitRow(obs: org.apache.spark.sql.Observation,
-      timeoutMs: Long = 120000L): Option[org.apache.spark.sql.Row] = {
-    val deadline = System.nanoTime() + timeoutMs * 1000000L
-    var row = org.apache.spark.sql.graft.Bridge.observedRow(obs)
-    while (row.isEmpty && System.nanoTime() < deadline) {
-      Thread.sleep(5L)
-      row = org.apache.spark.sql.graft.Bridge.observedRow(obs)
-    }
-    row
-  }
+      timeoutMs: Long = 120000L): Option[org.apache.spark.sql.Row] =
+    scala.util.Try(scala.concurrent.Await.result(
+      org.apache.spark.sql.graft.Bridge.observationFuture(obs),
+      scala.concurrent.duration.Duration(timeoutMs, "ms"))).toOption
 }
 
 case class WriteStatsAgg(
@@ -77,9 +66,6 @@ case class WriteStatsAgg(
     normStr: Expression,
     zone: Expression,
     nullFlag: Expression,
-    pidKey: Boolean = false, // compose (taskPartitionId << 32) | key —
-    // per-FILE granularity for the clustered writer (SparkPartitionID
-    // is Nondeterministic and cannot eval on the accumulator path)
     mutableAggBufferOffset: Int = 0,
     inputAggBufferOffset: Int = 0)
     extends TypedImperativeAggregate[mutable.LongMap[WriteStatsAgg.Acc]] {
@@ -113,12 +99,8 @@ case class WriteStatsAgg(
       input: InternalRow): mutable.LongMap[WriteStatsAgg.Acc] = {
     val k0 = key.eval(input)
     if (k0 == null) return buf // never produced by the write path
-    val k =
-      if (!pidKey) k0.asInstanceOf[Long]
-      else (Option(org.apache.spark.TaskContext.get())
-        .map(_.partitionId().toLong).getOrElse(0L) << 32) |
-        (k0.asInstanceOf[Long] & 0xffffffffL)
-    val acc = buf.getOrElseUpdate(k, new WriteStatsAgg.Acc)
+    val acc = buf.getOrElseUpdate(
+      WriteStatsAgg.fileKeyOf(k0.asInstanceOf[Long]), new WriteStatsAgg.Acc)
     acc.rows += 1L
     val ns = normStr.eval(input)
     if (ns != null) {
@@ -273,8 +255,8 @@ case class WriteStatsAgg(
   * [[WriteStatsAgg]] — so a declared table's zone sidecar entries for
   * freshly-written files cost zero extra jobs and zero re-read
   * ([[ZoneSkip.buildZones]] consumes them as pending offers and scans
-  * only files no offer covers). Inputs per row: `key` — the file group
-  * (bucket, or pid<<32|bucket for the clustered writer); one RENDERED
+  * only files no offer covers). Inputs per row: `key` — the row's
+  * bucket, grouped per file as [[WriteStatsAgg.fileKey]]; one RENDERED
   * expression per zone column ([[ZoneSkip]]'s `rendered` — LongType,
   * DoubleType or StringType, the exact expression whose min/max the
   * readback build aggregates).
@@ -293,9 +275,6 @@ case class ZoneStatsAgg(
     kindCodes: Seq[Int], // 1 = long, 2 = double, 3 = string — passed
     // explicitly: children are UNRESOLVED at construction, so their
     // dataType cannot be consulted here; the caller knows the schema
-    pidKey: Boolean = false, // compose (taskPartitionId << 32) | key —
-    // per-FILE granularity for the clustered writer (SparkPartitionID
-    // is Nondeterministic and cannot eval on the accumulator path)
     mutableAggBufferOffset: Int = 0,
     inputAggBufferOffset: Int = 0)
     extends TypedImperativeAggregate[mutable.LongMap[Array[ZoneStatsAgg.ZAcc]]] {
@@ -322,12 +301,8 @@ case class ZoneStatsAgg(
       input: InternalRow): mutable.LongMap[Array[ZoneStatsAgg.ZAcc]] = {
     val k0 = key.eval(input)
     if (k0 == null) return buf
-    val k =
-      if (!pidKey) k0.asInstanceOf[Long]
-      else (Option(org.apache.spark.TaskContext.get())
-        .map(_.partitionId().toLong).getOrElse(0L) << 32) |
-        (k0.asInstanceOf[Long] & 0xffffffffL)
-    val accs = buf.getOrElseUpdate(k,
+    val accs = buf.getOrElseUpdate(
+      WriteStatsAgg.fileKeyOf(k0.asInstanceOf[Long]),
       Array.fill(renders.size)(new ZoneStatsAgg.ZAcc))
     var i = 0
     while (i < accs.length) {
@@ -521,6 +496,18 @@ object ZoneStatsAgg {
 }
 
 object WriteStatsAgg {
+  /** The FILE a row lands in: (write task << 32) | bucket. The write
+    * opens one file per (task, bucket) pair, and the task is the
+    * part-file name's id. */
+  private[store] def fileKey(task: Int, bucket: Long): Long =
+    (task.toLong << 32) | (bucket & 0xffffffffL)
+
+  /** [[fileKey]] of a row in the running task. The task id is read
+    * here because SparkPartitionID is Nondeterministic and cannot eval
+    * on the observed-metrics path. */
+  private[store] def fileKeyOf(bucket: Long): Long =
+    fileKey(org.apache.spark.TaskContext.getPartitionId(), bucket)
+
   final class Acc {
     var rows: Long = 0L
     var minK: UTF8String = null

@@ -18,12 +18,12 @@ object Bridge {
   def waitListenerBus(spark: org.apache.spark.sql.SparkSession): Unit =
     spark.sparkContext.listenerBus.waitUntilEmpty()
 
-  /** Non-blocking poll of an [[org.apache.spark.sql.Observation]]'s
-    * metrics row (`getRowOrEmpty` is `private[sql]`; the public `get`
-    * blocks with no timeout). None until the listener delivers. */
-  def observedRow(obs: org.apache.spark.sql.Observation)
-      : Option[org.apache.spark.sql.Row] =
-    obs.getRowOrEmpty
+  /** Completion of an [[org.apache.spark.sql.Observation]]'s metrics
+    * row (`future` is `private[sql]`; the public `get` blocks with no
+    * timeout), so callers can bound their wait. */
+  def observationFuture(obs: org.apache.spark.sql.Observation)
+      : scala.concurrent.Future[org.apache.spark.sql.Row] =
+    obs.future
 
   /** Catalyst predicate → v1 `sources.Filter` (`protected[sql]` in
     * DataSourceStrategy): lets the DML strategy ask the same question

@@ -1,7 +1,11 @@
 package graft
 
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.Bridge
 import org.apache.spark.sql.types._
 
 import graft.mapping.Mapping
@@ -11,7 +15,10 @@ import graft.store.{ManifestTable, ZoneSkip}
   * the write job's observe) against GROUND-TRUTH recomputes from the
   * committed files — the equivalence the fusion claims: observed
   * FileEntry stats equal what the pre-fusion readback aggregated, and
-  * write-time zone offers equal what a scan build computes. */
+  * write-time zone offers equal what a scan build computes. Also pins
+  * that the observed path is the one that runs (one labeled write
+  * execution, no readback after it), and that the readback fallback a missed
+  * observation takes writes the same entries. */
 class WriteStatsFusionSpec extends SparkSpec {
   import spark.implicits._
 
@@ -19,6 +26,40 @@ class WriteStatsFusionSpec extends SparkSpec {
     val root = s"target/test-tmp/$name"
     org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(root))
     root
+  }
+
+  /** Runs `op`; returns (description, SQL execution id) of each Spark
+    * job it started, in start order. */
+  private def jobsOf(op: => Unit): Seq[(String, String)] = {
+    val descs = new java.util.concurrent.ConcurrentLinkedQueue[(String, String)]
+    val l = new SparkListener {
+      override def onJobStart(js: SparkListenerJobStart): Unit = {
+        def prop(k: String) = Option(js.properties)
+          .flatMap(p => Option(p.getProperty(k))).getOrElse("")
+        descs.add(prop("spark.job.description") ->
+          prop("spark.sql.execution.id"))
+      }
+    }
+    Bridge.waitListenerBus(spark)
+    spark.sparkContext.addSparkListener(l)
+    try { op; Bridge.waitListenerBus(spark) }
+    finally spark.sparkContext.removeSparkListener(l)
+    descs.asScala.toSeq
+  }
+
+  /** The fused write: the operation ENDS in its `graft.write` jobs — no
+    * readback job follows them — and they all belong to one query
+    * execution, the write action. (Adaptive execution runs each shuffle
+    * stage, and a range exchange's sampling, as a job of its own under
+    * the same label and execution.) */
+  private def assertFusedWrite(op: String, jobs: Seq[(String, String)])
+      : Unit = {
+    val first = jobs.indexWhere(_._1.startsWith("graft.write"))
+    val tail = if (first < 0) Nil else jobs.drop(first)
+    assert(tail.nonEmpty && tail.forall(_._1.startsWith("graft.write")) &&
+        tail.map(_._2).distinct.size == 1,
+      s"$op should end in one graft.write execution, ran: " +
+        jobs.mkString(" | "))
   }
 
   test("merge-written entry stats equal a readback recompute " +
@@ -33,8 +74,9 @@ class WriteStatsFusionSpec extends SparkSpec {
     val rows = spark.createDataFrame(java.util.Arrays.asList(
       Row("Foo", 1L), Row("BAR", 2L), Row("baz", 3L), Row("QUX", 4L),
       Row(null, 0L)), strSchema)
-    ManifestTable.create(rows, "k", root, numBuckets = 3,
-      keyComparator = lowerCmp)
+    assertFusedWrite("create", jobsOf(
+      ManifestTable.create(rows, "k", root, numBuckets = 3,
+        keyComparator = lowerCmp)))
     val m = ManifestTable.currentManifest(spark, root).get
     assert(m.entries.nonEmpty)
     m.entries.foreach { e =>
@@ -77,8 +119,9 @@ class WriteStatsFusionSpec extends SparkSpec {
     val df = spark.range(0, 400).select(col("id"),
       pmod(col("id") * 37L + 11L, lit(1000L)).as("score"))
     ManifestTable.create(df, "id", root, numBuckets = 4)
-    ManifestTable.clusterBy(spark, root, schema, "id", "score",
-      token = 100L, filesPerBucket = 4)
+    assertFusedWrite("clusterBy", jobsOf(
+      ManifestTable.clusterBy(spark, root, schema, "id", "score",
+        token = 100L, filesPerBucket = 4)))
     val m = ManifestTable.currentManifest(spark, root).get
     assert(m.entries.size > 4, "clusterBy should split buckets into files")
     assert(m.entries.forall(_.sorted))
@@ -133,7 +176,7 @@ class WriteStatsFusionSpec extends SparkSpec {
       ManifestTable.merge(m.project(batch), 1L, m, root, schema)
     }
     mergeBatch(rootA)
-    mergeBatch(rootB)
+    assertFusedWrite("merge", jobsOf(mergeBatch(rootB)))
     ZoneSkip.buildZones(spark, rootB, schema, Seq("price", "day"))
 
     def zoneRows(root: String): Map[(String, String), Row] =
@@ -154,5 +197,71 @@ class WriteStatsFusionSpec extends SparkSpec {
       assert(a(k) == b(k), s"zone row for $k: offered ${a(k)} " +
         s"vs scanned ${b(k)}")
     }
+  }
+
+  test("the readback fallback writes the observed path's entries " +
+      "(hash create, merge, clusterBy, renamed column)") {
+    val schema = StructType(Seq(
+      StructField("id", LongType), StructField("pts", LongType)))
+    // The same ops on two roots, one with the write's observation
+    // dropped. The renamed column makes the fallback map physical file
+    // columns back to logical names.
+    def run(name: String, drop: Boolean): Seq[Seq[ManifestTable.FileEntry]] = {
+      val root = freshRoot(name)
+      ManifestTable.testDropObservation = drop
+      try {
+        def entries = ManifestTable.currentManifest(spark, root).get.entries
+        ManifestTable.create(spark.range(0, 400).select(col("id"),
+          pmod(col("id") * 37L + 11L, lit(1000L)).as("score")),
+          "id", root, numBuckets = 4)
+        val created = entries
+        ManifestTable.renameColumn(spark, root, "score", "pts")
+        val m = new Mapping("id")
+        schema.fieldNames.foreach(f => m.field(f, parser = c => c))
+        m.complete(schema)
+        ManifestTable.merge(m.project(spark.range(350, 450).select(
+          col("id"), pmod(col("id") * 11L, lit(900L)).as("pts"))),
+          1L, m, root, schema)
+        val merged = entries
+        ManifestTable.clusterBy(spark, root, schema, "id", "pts",
+          token = 100L, filesPerBucket = 4)
+        Seq(created, merged, entries)
+      } finally ManifestTable.testDropObservation = false
+    }
+    def fields(es: Seq[ManifestTable.FileEntry]) = es.map(e =>
+      (e.bucket, e.seq, e.rows, e.minKey, e.maxKey, e.minZ, e.maxZ,
+        e.nullKeys, e.named, e.sorted, e.bytes))
+      .sortBy(t => (t._1, t._4, t._5, t._3))
+    // the fused legs' job assertion catches the fallback: its readback
+    // is a job after the write
+    ManifestTable.testDropObservation = true
+    val probe =
+      try jobsOf(ManifestTable.create(spark.range(0, 40).toDF("id"), "id",
+        freshRoot("wsf_fb_probe"), numBuckets = 2))
+      finally ManifestTable.testDropObservation = false
+    assertThrows[org.scalatest.exceptions.TestFailedException](
+      assertFusedWrite("probe", probe))
+    val observed = run("wsf_fb_observed", drop = false)
+    val readback = run("wsf_fb_readback", drop = true)
+    Seq("create", "merge", "clusterBy").zipWithIndex.foreach { case (op, i) =>
+      assert(observed(i).nonEmpty)
+      assert(fields(readback(i)) == fields(observed(i)),
+        s"$op: readback entries differ from the observed ones")
+    }
+    assert(observed(2).forall(_.sorted) && observed(2).size > 4)
+  }
+
+  test("partIdOf reads task ids of five or more digits") {
+    val job = "3f2a9c4e-1b7d-4e0a-9f3c-2d8b6a1e5c70"
+    assert(ManifestTable.partIdOf(s"part-00007-$job.c000.snappy.parquet")
+      .contains(7))
+    assert(ManifestTable.partIdOf(
+      s"part-123456-${job}_00007.c000.snappy.parquet").contains(123456))
+    assert(ManifestTable.partIdOf(s"part-1234567-$job.c000.snappy.parquet")
+      .contains(1234567))
+    assert(ManifestTable.partIdOf(s"part-00042-${job}_00003").contains(42))
+    Seq("part-00007", "part--7-x.parquet", "part-0x07-x.parquet",
+      "data-00007-x.parquet", "part-99999999999-x.parquet")
+      .foreach(n => assert(ManifestTable.partIdOf(n).isEmpty, n))
   }
 }
