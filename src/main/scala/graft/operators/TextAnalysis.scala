@@ -193,19 +193,20 @@ object TextAnalysis {
       qualityScoreFrom(st).as("quality_score"))
   }
 
-  /** PII-style redaction: replace emails, URLs and long digit runs with
-    * placeholder tokens. Plain `regexp_replace` chain — codegen'd, and the
-    * patterns stay in the RE2-compatible subset so external engines (and
-    * the DuckDB oracle) agree byte-for-byte. */
+  /** PII-style redaction: replace URLs, then emails, then digit runs of
+    * 7+ with placeholder tokens. The semantics are those of replacing all
+    * matches of these three regexes, in this order; the patterns stay in
+    * the RE2-compatible subset so external engines (and the DuckDB
+    * oracle) agree byte-for-byte. The column is the [[RedactPii]] kernel
+    * — one codegen'd linear scan of the UTF-8 bytes per pattern —
+    * which `RedactPiiSpec` pins to the regex chain. */
   val EmailRe = "[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\\.[A-Za-z]{2,}"
   val UrlRe = "https?://[^ \\t\\n]+"
   val LongDigitsRe = "[0-9]{7,}"
-  def redact(text: Column): Column =
-    regexp_replace(
-      regexp_replace(
-        regexp_replace(text, UrlRe, "<URL>"),
-        EmailRe, "<EMAIL>"),
-      LongDigitsRe, "<NUM>")
+  def redact(text: Column): Column = {
+    val B = org.apache.spark.sql.graft.Bridge
+    B.column(RedactPii(B.expression(text)))
+  }
 
   /** Winnowing-style document fingerprint: hash every k-char shingle, take
     * the minimum hash in each window of w consecutive shingles, and hash the

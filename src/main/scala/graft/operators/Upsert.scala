@@ -49,8 +49,12 @@ final case class UpsertResult(
   * value; if that restores the stored value the pending update is
   * cancelled. The same semantics here, in one `_line`-ordered aggregation
   * per key (see `dedupAgg`) followed by change-detection against the
-  * target — a hash aggregate with map-side partials, where a
-  * row_number window would sort-shuffle every source row.
+  * target. `max_by`/`min_by` over string and array buffers cannot
+  * hash-aggregate, so the dedup plans as a sort aggregate with map-side
+  * partials: `Sort → SortAggregate(partial) → Exchange(key) → Sort →
+  * SortAggregate(final)`, then the exchange on the key into the target's
+  * buckets and a sort-merge join (the `bulk_import` merge's plan). The
+  * partials still shrink duplicate keys before the first exchange.
   */
 object Upsert {
 

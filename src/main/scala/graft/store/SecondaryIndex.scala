@@ -554,9 +554,9 @@ object SecondaryIndex {
     * live file may hold a NULL-keyed row (such rows are invisible to
     * any index, yet the predicate may match them — the
     * [[graft.store.AutoPrune.freshIndexOn]] soundness gates). `None` =
-    * no usable index / over the key cap — the caller keeps its current
-    * candidate set. An EMPTY bucket set is a proof of absence: no row
-    * holds any probed value at this version. */
+    * no usable index / over the key cap / a failed probe (logged) — the
+    * caller keeps its current candidate set. An EMPTY bucket set is a
+    * proof of absence: no row holds any probed value at this version. */
   def hintBuckets(spark: SparkSession, root: String,
       schema: StructType, m: ManifestTable.Manifest,
       column: String, values: Seq[Any]): Option[Int => Boolean] = {
@@ -574,7 +574,13 @@ object SecondaryIndex {
     try keysOf(spark, ix, values, maxKeys = 100000).map { keys =>
       val bks = ManifestTable.keyBuckets(spark, m, keys)
       bks.contains _
-    } catch { case scala.util.control.NonFatal(_) => None }
+    } catch {
+      case scala.util.control.NonFatal(e) =>
+        org.slf4j.LoggerFactory.getLogger(getClass).warn(
+          s"index hint at ${ix.indexRoot} failed; discovery at $root " +
+            "keeps its full candidate set", e)
+        None
+    }
   }
 
   /** [[keysOf]]'s RANGE sibling (rangeLayout indexes only): the

@@ -80,7 +80,8 @@ object StreamingImport {
     * path) as the merge token's streamId means a wiped-and-reused
     * checkpoint path reprocesses as NEW data instead of colliding
     * with the old incarnation's last committed batch (whose batchIds
-    * also started at 0). Falls back to the path when unreadable. */
+    * also started at 0). Falls back to the path when absent, and with
+    * a WARN when present but unreadable. */
   private[graft] def checkpointIdentity(
       spark: SparkSession, checkpoint: String): String =
     try {
@@ -96,7 +97,15 @@ object StreamingImport {
         """"id"\s*:\s*"([^"]+)"""".r.findFirstMatchIn(text)
           .map(_.group(1)).getOrElse(checkpoint)
       }
-    } catch { case scala.util.control.NonFatal(_) => checkpoint }
+    } catch {
+      case scala.util.control.NonFatal(e) =>
+        org.slf4j.LoggerFactory.getLogger(getClass).warn(
+          s"unreadable checkpoint metadata at $checkpoint/metadata; the " +
+            "merge token's stream id falls back to the checkpoint path, " +
+            "which differs from the uuid earlier batches of this " +
+            "checkpoint may have committed under", e)
+        checkpoint
+    }
 
   /** One micro-batch merge — the foreachBatch body, exposed so replay
     * semantics are testable. Delegates to [[ManifestTable.merge]] with

@@ -311,6 +311,40 @@ class CurateSpec extends SparkSpec {
     assert(out.getString(1).contains("<EMAIL>"))
   }
 
+  test("redaction runs as one codegen'd kernel, not a regex chain") {
+    import org.apache.spark.sql.catalyst.expressions.RegExpReplace
+    import org.apache.spark.sql.execution.{InputAdapter, ProjectExec, SparkPlan, WholeStageCodegenExec}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.functions._
+    import graft.operators.RedactPii
+    object Plans extends AdaptiveSparkPlanHelper
+    // a range, not a local relation: the optimizer folds projections over
+    // local rows into the relation, which would leave no Project to check
+    val docs = spark.range(0, 40).select(col("id").as("doc_id"),
+      concat(lit("the contact for the data team is help"), col("id"),
+        lit("@example.com and it is fine")).as("text"))
+    val curated = Curate(docs, minQuality = 0.2)
+    assert(curated.collect().forall(_.getString(1).contains("<EMAIL>")))
+    val plan = curated.queryExecution.executedPlan
+    // the operators one generated stage fuses: down to its input adapters
+    def stageOps(p: SparkPlan): Seq[SparkPlan] = p match {
+      case _: InputAdapter => Nil
+      case o => o +: o.children.flatMap(stageOps)
+    }
+    val fused = Plans.collect(plan) { case w: WholeStageCodegenExec => w }
+      .flatMap(w => stageOps(w.child))
+    def redacts(p: SparkPlan) = p match {
+      case pr: ProjectExec =>
+        pr.projectList.exists(_.exists(_.isInstanceOf[RedactPii]))
+      case _ => false
+    }
+    assert(fused.exists(redacts),
+      s"no redact_pii projection inside whole-stage codegen:\n$plan")
+    assert(!Plans.collect(plan) { case p => p.expressions }.flatten
+      .exists(_.exists(_.isInstanceOf[RegExpReplace])),
+      s"regexp_replace left in the plan:\n$plan")
+  }
+
   test("full pipeline composes: curate -> line dedup -> decontaminate " +
       "-> mixture -> chunk -> pack") {
     import org.apache.spark.sql.functions._

@@ -368,6 +368,31 @@ class DeleteWhereSpec extends SparkSpec {
       "v", Seq("x")).isEmpty, "udfKey layouts must decline the hint")
   }
 
+  test("a failing index probe declines the hint; the delete stays exact") {
+    import graft.store.SecondaryIndex
+    val root = freshRoot("delw_ix_broken")
+    val ixRoot = freshRoot("delw_ix_broken_side")
+    ManifestTable.create(
+      (1L to 400L).map(i => (i, s"dom${i % 50}", i)).toDF("id", "seg", "v"),
+      "id", root, numBuckets = 8)
+    SecondaryIndex.create(spark,
+      SecondaryIndex.Index(root, schema, "id", ixRoot, "seg", 4))
+    val m = ManifestTable.currentManifest(spark, root).get
+    assert(SecondaryIndex.hintBuckets(spark, root, schema, m, "seg",
+      Seq("dom7")).isDefined, "the intact index serves the hint")
+    // the index stays registered and fresh, but its data files are gone
+    org.apache.commons.io.FileUtils.listFiles(new java.io.File(ixRoot,
+      "data"), Array("parquet"), true).forEach(f => assert(f.delete()))
+    assert(SecondaryIndex.hintBuckets(spark, root, schema, m, "seg",
+      Seq("dom7")).isEmpty)
+    ManifestTable.deleteWhere(spark, root, schema,
+      d => d("seg") === "dom7", token = 1L,
+      indexProbes = Seq(("seg", Seq("dom7"))))
+    assert(ManifestTable.read(spark, root, schema).count() == 392L)
+    assert(ManifestTable.read(spark, root, schema)
+      .filter(col("seg") === "dom7").count() == 0L)
+  }
+
   test("SQL DELETE derives the zone hint from its own conjuncts") {
     import graft.store.ZoneSkip
     GraftExtensions.register(spark)

@@ -146,6 +146,14 @@ class StreamingImportSpec extends SparkSpec {
     assert(StreamingImport.checkpointIdentity(spark, ckpt) == ckpt)
   }
 
+  test("unreadable checkpoint metadata falls back to the path") {
+    val ckpt = "target/test-tmp/ckpt_ident_unreadable"
+    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(ckpt))
+    // a directory where the metadata file belongs: exists, cannot be read
+    new java.io.File(s"$ckpt/metadata").mkdirs()
+    assert(StreamingImport.checkpointIdentity(spark, ckpt) == ckpt)
+  }
+
   test("delta-mode continuous import with periodic compaction equals " +
       "the rewrite mode") {
     val root = "target/test-tmp/stream_delta"
