@@ -3460,7 +3460,7 @@ object SparkEntry {
            FROM nodes n0 LEFT JOIN s$k ON n0.h = s$k.h)"""
     }.mkString(",\n")
 
-    // DuckDB replication of TextNorm.tokenize + word-3-gram shingles (the
+    // DuckDB replication of TextNorm.normalize + word-3-gram shingles (the
     // dedup family's normalization): lowercase, collapse non-alnum runs to
     // single spaces, split, 3-grams (short docs → one whole-text shingle).
     def tokSqlOf(texpr: String): String =

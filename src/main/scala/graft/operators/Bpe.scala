@@ -186,11 +186,15 @@ case class BpeEncode(child: Expression, merges: Seq[(String, String)])
   }
 
   override def eval(input: InternalRow): Any = {
-    val v = child.eval(input)
-    val toks = TextNorm.tokenize(if (v == null) "" else v.toString)
+    val norm = TextNorm.normalize(child.eval(input).asInstanceOf[UTF8String])
     val out = mutable.ArrayBuffer.empty[String]
     var i = 0
-    while (i < toks.length) { encodeWord(toks(i), out); i += 1 }
+    while (i < norm.tokens) {
+      val from = norm.tokenStart(i)
+      encodeWord(new String(norm.bytes, from, norm.tokenEnd(i) - from,
+        java.nio.charset.StandardCharsets.US_ASCII), out)
+      i += 1
+    }
     new GenericArrayData(
       out.map(s => UTF8String.fromString(s)).toArray[Any])
   }

@@ -14,14 +14,6 @@ import org.apache.spark.sql.types._
   */
 object Dedup {
 
-  /** Normalized word tokens as a Column (public helper; the hot-path
-    * dedup expressions tokenize internally via [[TextNorm]]). */
-  def normTokens(text: Column): Column = {
-    val cleaned = trim(regexp_replace(lower(text), "[^a-z0-9]+", " "))
-    when(cleaned === "" || text.isNull, array().cast(ArrayType(StringType)))
-      .otherwise(split(cleaned, " "))
-  }
-
   /** Word n-gram shingles (default 3-grams); single-pass custom
     * expression — see [[Shingles]] for why the built-in composition is
     * quadratic when interpreted. */
@@ -67,11 +59,14 @@ object Dedup {
   /** MinHash + banded LSH near-duplicate candidate pairs with exact Jaccard
     * verification (numHashes = bands * rowsPerBand).
     *
-    * Pipeline: shingle → full minhash signature in one pass (see
-    * [[MinHashSig]]) → band hashes → explode(bands) over a SLIM
-    * (doc_id, band, bh) relation → self-equi-join → distinct pairs →
-    * re-join shingle sets → exact Jaccard → threshold. The heavy shingle
-    * arrays never travel through the exploded band shuffle.
+    * Pipeline: full minhash signature in one pass (see [[MinHashSig]]) →
+    * band hashes → explode(bands) over a SLIM (doc_id, band, bh) relation
+    * → co-partitioned self-join (sort-merge: both sides read the one
+    * (band, bh) exchange, which the skew cap's window already made) →
+    * distinct pairs → join each side's text → exact Jaccard from the two
+    * texts ([[ShingleJaccard]]) → threshold. No per-document shingle
+    * relation is built: only the candidate pairs' texts travel to the
+    * verify step, and the band shuffle carries no text at all.
     */
   def minhashLsh(
       docs: DataFrame,
@@ -80,13 +75,11 @@ object Dedup {
       ngram: Int = 3,
       threshold: Double = 0.5,
       maxBucketSize: Int = 10000): DataFrame = {
-    val withSh = docs
-      .select(col("doc_id"), shingles(col("text"), ngram).as("sh"))
     val banded = capBuckets(
       bandIndex(docs, bands, rowsPerBand, ngram),
       Seq("band", "bh"), maxBucketSize)
 
-    val a = banded.alias("a")
+    val a = banded.alias("a").hint("shuffle_merge")
     val b = banded.alias("b")
     val pairs = a.join(b,
       col("a.band") === col("b.band") && col("a.bh") === col("b.bh")
@@ -94,13 +87,13 @@ object Dedup {
       .select(col("a.doc_id").as("id_a"), col("b.doc_id").as("id_b"))
       .dropDuplicates("id_a", "id_b")
 
-    val shA = withSh.select(col("doc_id").as("id_a"), col("sh").as("sh_a"))
-    val shB = withSh.select(col("doc_id").as("id_b"), col("sh").as("sh_b"))
+    val texts = docs.select(col("doc_id"), col("text"))
     pairs
-      .join(shA, "id_a").join(shB, "id_b")
-      .withColumn("jaccard", jaccard(col("sh_a"), col("sh_b")))
+      .join(texts.select(col("doc_id").as("id_a"), col("text").as("text_a")), "id_a")
+      .join(texts.select(col("doc_id").as("id_b"), col("text").as("text_b")), "id_b")
+      .select(col("id_a"), col("id_b"),
+        shingleJaccard(col("text_a"), col("text_b"), ngram).as("jaccard"))
       .filter(col("jaccard") >= threshold)
-      .select("id_a", "id_b", "jaccard")
   }
 
   /** Skew guard for bucketed self-joins: drop buckets holding more than
@@ -133,6 +126,14 @@ object Dedup {
     val union = size(array_union(a, b)).cast(DoubleType)
     when(union === 0, lit(0.0)).otherwise(inter / union)
   }
+
+  /** Exact n-gram Jaccard of two texts, equal to
+    * `jaccard(shingles(a, n), shingles(b, n))` without building either
+    * array (see [[ShingleJaccard]]). */
+  def shingleJaccard(a: Column, b: Column, n: Int = 3): Column =
+    org.apache.spark.sql.graft.Bridge.column(ShingleJaccard(
+      org.apache.spark.sql.graft.Bridge.expression(a),
+      org.apache.spark.sql.graft.Bridge.expression(b), n))
 
   /** 64-bit SimHash over normalized tokens (see [[SimHash64]]). */
   def simhash(text: Column): Column =

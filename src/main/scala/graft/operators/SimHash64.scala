@@ -3,9 +3,10 @@ package graft.operators
 import org.apache.spark.sql.catalyst.expressions.{Expression, ImplicitCastInputTypes, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.types.{DataType, LongType, StringType}
+import org.apache.spark.unsafe.types.UTF8String
 
 /** 64-bit SimHash over a document's normalized word tokens, computed from
-  * the raw text in one pass ([[TextNorm.tokenize]] — no interpreted regex
+  * the raw text in one pass ([[TextNorm.normalize]] — no interpreted regex
   * child).
   *
   * Classic Charikar construction: each token contributes its 64-bit hash's
@@ -13,7 +14,8 @@ import org.apache.spark.sql.types.{DataType, LongType, StringType}
   * accumulated position. Near-identical token multisets yield fingerprints
   * within a small Hamming distance.
   *
-  * Token hash is FNV-1a 64 (self-contained, deterministic across JVMs).
+  * Token hash is FNV-1a 64 (self-contained, deterministic across JVMs),
+  * taken over each token's slice of the normalized bytes.
   * Eval-based expression: the 64-lane accumulator has no built-in
   * equivalent; still one narrow pass over the data.
   */
@@ -25,11 +27,11 @@ case class SimHash64(child: Expression) extends UnaryExpression
   override def dataType: DataType = LongType
 
   override def nullSafeEval(v: Any): Any = {
-    val toks = TextNorm.tokenize(v.toString)
+    val norm = TextNorm.normalize(v.asInstanceOf[UTF8String])
     val acc = new Array[Int](64)
     var i = 0
-    while (i < toks.length) {
-      val h = SimHash64.fnv1a64(toks(i))
+    while (i < norm.tokens) {
+      val h = TextNorm.fnv1a64(norm.bytes, norm.tokenStart(i), norm.tokenEnd(i))
       var j = 0
       while (j < 64) {
         if (((h >>> j) & 1L) == 1L) acc(j) += 1 else acc(j) -= 1

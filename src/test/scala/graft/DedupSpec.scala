@@ -1,6 +1,10 @@
 package graft
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.{InputAdapter, SparkPlan, WholeStageCodegenExec}
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec, ReusedExchangeExec, ShuffleExchangeExec}
+import org.apache.spark.sql.execution.joins.SortMergeJoinExec
 import org.apache.spark.sql.functions._
 
 import graft.operators.{Dedup, SimHash64}
@@ -43,6 +47,88 @@ class DedupSpec extends SparkSpec {
   test("minhash LSH plan has no cartesian product") {
     val plan = Dedup.minhashLsh(docs).queryExecution.executedPlan.toString
     assert(!plan.contains("Cartesian"), s"plan had cartesian:\n$plan")
+  }
+
+  /** Every operator of an executed plan, through adaptive stages and
+    * reused exchanges. */
+  private def operators(p: SparkPlan): Seq[SparkPlan] = p match {
+    case a: AdaptiveSparkPlanExec => operators(a.executedPlan)
+    case q: QueryStageExec => q +: operators(q.plan)
+    case r: ReusedExchangeExec => r +: operators(r.child)
+    case o => o +: o.children.flatMap(operators)
+  }
+
+  /** The operators fused into one whole-stage codegen stage. */
+  private def fused(p: SparkPlan): Seq[SparkPlan] =
+    p +: p.children.filterNot(_.isInstanceOf[InputAdapter]).flatMap(fused)
+
+  test("minhash LSH plan: co-partitioned band self-join, text verify in codegen") {
+    val df = Dedup.minhashLsh(docs, bands = 8, rowsPerBand = 2, threshold = 0.4)
+    df.collect()
+    val ops = operators(df.queryExecution.executedPlan)
+    val plan = df.queryExecution.executedPlan.toString
+    val bandJoins = ops.collect {
+      case j: SortMergeJoinExec if j.leftKeys.exists(_.toString.startsWith("band")) => j
+    }
+    assert(bandJoins.size == 1, plan)
+    val j = bandJoins.head
+    assert(operators(j.left).exists(_.isInstanceOf[ShuffleExchangeExec]), plan)
+    assert(operators(j.right).exists(_.isInstanceOf[ReusedExchangeExec]), plan)
+    assert(!ops.exists {
+      case b: BroadcastExchangeExec => b.output.exists(_.name == "bh")
+      case _ => false
+    }, plan)
+    assert(!plan.contains("shingles("), plan)
+    val verify = ops.filter(_.expressions.exists(_.toString.contains("shingle_jaccard(")))
+    val inCodegen = ops.collect { case w: WholeStageCodegenExec => fused(w.child) }.flatten
+    assert(verify.nonEmpty && verify.forall(v => inCodegen.exists(_ eq v)), plan)
+  }
+
+  /** `minhashLsh` as it was before verification moved onto the texts:
+    * a per-document shingle-array relation joined to the distinct pairs
+    * and compared with `Dedup.jaccard`. */
+  private def shingleArrayLsh(corpus: DataFrame, threshold: Double): DataFrame = {
+    val withSh = corpus.select(col("doc_id"), Dedup.shingles(col("text"), 3).as("sh"))
+    val banded = Dedup.capBuckets(Dedup.bandIndex(corpus, 8, 2, 3),
+      Seq("band", "bh"), 10000)
+    val a = banded.alias("a")
+    val b = banded.alias("b")
+    val pairs = a.join(b,
+      col("a.band") === col("b.band") && col("a.bh") === col("b.bh")
+        && col("a.doc_id") < col("b.doc_id"))
+      .select(col("a.doc_id").as("id_a"), col("b.doc_id").as("id_b"))
+      .dropDuplicates("id_a", "id_b")
+    pairs
+      .join(withSh.select(col("doc_id").as("id_a"), col("sh").as("sh_a")), "id_a")
+      .join(withSh.select(col("doc_id").as("id_b"), col("sh").as("sh_b")), "id_b")
+      .withColumn("jaccard", Dedup.jaccard(col("sh_a"), col("sh_b")))
+      .filter(col("jaccard") >= threshold)
+      .select("id_a", "id_b", "jaccard")
+  }
+
+  test("minhash LSH output equals the shingle-array pipeline") {
+    val rnd = new scala.util.Random(7L)
+    val words = Seq("the", "Brown", "fox", "\u0130zmir", "\u212Aelvin",
+      "caf\u00e9", "dog")
+    val base = (0 until 40).map(_ => Seq.fill(4 + rnd.nextInt(14))(
+      words(rnd.nextInt(words.size))).mkString(" "))
+    val generated = base.zipWithIndex.flatMap { case (t, i) =>
+      Seq((100L + 2 * i, t),
+        (101L + 2 * i, t.split(" ").map(w =>
+          if (rnd.nextInt(6) == 0) words(rnd.nextInt(words.size)) else w)
+          .mkString(", ")))
+    }
+    val corpus = (docs.as[(Long, String)].collect().toSeq ++ generated ++
+      Seq((900L, null), (901L, ""), (902L, "!!")))
+      .toDF("doc_id", "text")
+    def rows(df: DataFrame) = df.select("id_a", "id_b", "jaccard").collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
+    for (t <- Seq(0.0, 0.4)) {
+      val want = rows(shingleArrayLsh(corpus, t))
+      assert(want.size > 20, s"threshold $t: only ${want.size} pairs")
+      assert(rows(Dedup.minhashLsh(corpus, bands = 8, rowsPerBand = 2,
+        threshold = t)) == want, s"threshold $t")
+    }
   }
 
   test("simhash: identical token sets get identical fingerprints") {

@@ -4,7 +4,8 @@ import org.scalacheck.Gen
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.helpers.A1N1
-import graft.operators.{SimHash64, TextNorm}
+import graft.operators.{Shingles, SimHash64, TextNorm}
+import org.apache.spark.unsafe.types.UTF8String
 import graft.sources.CsvLine
 
 /** Property-based checks for the pure-Scala kernels (the ones custom
@@ -65,7 +66,11 @@ class PropertySpec extends AnyFunSuite {
 
   test("tokenize output is lowercase alphanumeric words only") {
     forAll(Gen.asciiPrintableStr) { s =>
-      val toks = TextNorm.tokenize(s)
+      val norm = TextNorm.normalize(UTF8String.fromString(s))
+      val toks = (0 until norm.tokens).map { t =>
+        new String(norm.bytes, norm.tokenStart(t),
+          norm.tokenEnd(t) - norm.tokenStart(t), "US-ASCII")
+      }
       assert(toks.forall(t =>
         t.nonEmpty && t.forall(c => c.isDigit || (c >= 'a' && c <= 'z'))))
     }
@@ -76,7 +81,8 @@ class PropertySpec extends AnyFunSuite {
       Gen.choose(1, 5), 300) { (words, n) =>
         val toks = words.map(_.toLowerCase.filter(_.isLetterOrDigit))
           .filter(_.nonEmpty).toArray
-        val sh = TextNorm.shingles(toks, n)
+        val sh = Shingles.shingles(UTF8String.fromString(toks.mkString(" ")), n)
+          .array.map(_.toString)
         if (toks.length >= n) {
           assert(sh.length == toks.length - n + 1)
           assert(sh.head == toks.take(n).mkString(" "))
