@@ -64,6 +64,9 @@ import org.apache.spark.sql.SparkSession
   * probes happened to miss. Adjudication becomes mechanical: compare
   * `calib_base` across rounds for absolute machine speed, read
   * `mf`/`rechecked` for within-run interference.
+  *
+  * Session: [[GraftSession.tool]]; the fixture is SPARK_GRAFT_SF_DIR
+  * (default sf0.1). The committed captures ran at SPARK_GRAFT_CPUS=32.
   */
 /** The machine-contention probe behind [[Bench]]'s sentinel, factored
   * out so a spec can demonstrate its detection threshold under
@@ -206,38 +209,9 @@ object BenchSentinel {
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val reps = math.max(1, sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "3").toInt)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // Codegen cache sized for this workload (static conf, so it must
-      // be set at session build). The default 100-entry LRU thrashes:
-      // one manifest lifecycle query generates ~90+ codegen units per
-      // rep (setup + timed region exceed 100), so IDENTICAL generated
-      // code recompiled on every rep — measured 96 Janino compilations
-      // per manifest_mv rep at the default vs 0 on reps 2+ with the
-      // cache sized right. Scale-free: bounded driver memory (generated
-      // classes, ~KBs each) for compile-once semantics — the same
-      // trade at any data size or core count; a 100 TB driver running
-      // many commits per session needs it more, not less.
-      .config("spark.sql.codegen.cache.maxEntries", "4096")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // Warmup so the first timed query of each plan-shape family doesn't
-    // absorb one-time JVM/JIT/codegen startup: one action through the
-    // parquet read + aggregate path, then the flagship upsert on the
-    // TINY sf0.001 fixture — which Janino-compiles the parser expression
-    // family shared by the whole upsert group.
-    try spark.read.parquet(s"$sfDir/customer.parquet")
-      .selectExpr("count(distinct c_custkey)").collect()
-    catch { case e: Throwable =>
-      System.err.println(s"[bench] warmup read failed: ${e.getMessage}") }
-    try SparkEntry.entry(spark).count()
-    catch { case e: Throwable =>
-      System.err.println(s"[bench] warmup entry failed: ${e.getMessage}") }
+    val spark = GraftSession.tool("bench")
+    GraftSession.warmUp(spark, sfDir)
 
     def r3(x: Double): Double = math.rint(x * 1000) / 1000
 
@@ -340,9 +314,11 @@ object Bench {
               false
           }
           val wall = r3((System.nanoTime() - t0) / 1e9)
-          val b1 = BenchSentinel.sample()
+          // CPU and GC are read before the closing probe: its full-width
+          // burst is process CPU too and is not the query's
           out = (wall, r3(math.max(0L, cpuTime - c0) / 1e9),
             r3(math.max(0L, gcTime - g0) / 1e3), ok)
+          val b1 = BenchSentinel.sample()
           accepted = !ok || attempts >= 3 ||
             !BenchSentinel.bracketsDisagree(b0, b1)
           if (!accepted) System.err.println(

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Deterministic scale-up of a driver testdata directory: replicates each
@@ -35,6 +35,11 @@ import org.apache.spark.sql.functions._
   * timestamp form the source fixture has (INT64 nanos or
   * TIMESTAMP(MICROS) read as TIMESTAMP_NTZ), the copy round-trips the
   * same values and [[SparkEntry.events]] branches on the read schema.
+  *
+  * Usage: runMain graft.MakeScale [srcDir] [outDir] [factor] on
+  * [[GraftSession.tool]]; the sf1 fixture behind BENCH_SF1.json was
+  * made at SPARK_GRAFT_CPUS=32 (the rows written do not depend on it;
+  * their order across files may).
   */
 object MakeScale {
 
@@ -49,14 +54,7 @@ object MakeScale {
     val srcDir = if (args.length > 0) args(0) else "/root/testdata/sf0.1"
     val outDir = if (args.length > 1) args(1) else "target/testdata/sf1"
     val factor = if (args.length > 2) args(2).toInt else 10
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.tool("make-scale")
 
     def src(name: String): DataFrame =
       spark.read.parquet(s"$srcDir/$name.parquet")

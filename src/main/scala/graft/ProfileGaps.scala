@@ -1,52 +1,73 @@
 package graft
 
 import org.apache.spark.scheduler._
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.graft.Bridge
+import java.util.concurrent.ConcurrentHashMap
 import java.util.concurrent.atomic.AtomicInteger
+import scala.jdk.CollectionConverters._
 
-/** Driver-gap attribution profiler (optimization-round tooling, not part
-  * of the driver contract). [[Profile]] showed the manifest queries are
-  * job-count × driver-latency bound — this tool answers "what is the
-  * driver DOING in the gaps": a sampler thread polls the main thread's
-  * stack every few ms; samples taken while zero Spark jobs are active are
-  * gap samples, aggregated by their most informative frame group
-  * (analysis/optimization, physical planning, codegen, Hadoop fs ops,
-  * manifest commit helpers, parquet footer reads, ...).
+/** Per-job and driver-gap profiler for declared queries (optimization-round
+  * tooling, not part of the driver contract). Runs each query like Bench
+  * (setup outside the timed region, count() as the action) and reports
+  * two views of the timed region per rep:
+  *
+  *  - the job table: every Spark job's wall span, stages, tasks and
+  *    executor-time sum, with its call site, and the split of the wall
+  *    into job spans vs driver-side gaps — on local[32] with sf0.1
+  *    fixtures most queries are gap/scheduling-bound;
+  *  - what the driver is DOING in the gaps: a sampler thread polls every
+  *    live thread's stack every few ms; samples taken while zero Spark
+  *    jobs are active are gap samples, aggregated by their most
+  *    informative frame group (analysis/optimization, physical planning,
+  *    codegen, Hadoop fs ops, manifest commit helpers, parquet footer
+  *    reads, ...).
   *
   * Usage: runMain graft.ProfileGaps <query>[,<query>...] [reps]
-  * (SPARK_GRAFT_SF_DIR / SPARK_GRAFT_CPUS as in Bench.)
+  * (SPARK_GRAFT_SF_DIR as in Bench; the profiles quoted in
+  * OPTIMIZATION_r15.md and OPTIMIZATION_r16.md ran at SPARK_GRAFT_CPUS=32.)
   */
 object ProfileGaps {
+  private final case class JobRec(
+      desc: String, start: Long, var end: Long = 0L,
+      var tasks: Int = 0, var taskTime: Long = 0L, var stages: Int = 0)
+
   def main(args: Array[String]): Unit = {
     val names = args(0).split(",").map(_.trim).filter(_.nonEmpty)
     val reps = if (args.length > 1) args(1).toInt else 2
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.codegen.cache.maxEntries",
-        sys.env.getOrElse("SPARK_GRAFT_CODEGEN_CACHE", "100"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.tool("profile")
 
     val active = new AtomicInteger(0)
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
+    val jobs = new ConcurrentHashMap[Int, JobRec]()
+    val stageToJob = new ConcurrentHashMap[Int, Int]()
+    spark.sparkContext.addSparkListener(new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = {
         active.incrementAndGet()
-      override def onJobEnd(e: SparkListenerJobEnd): Unit =
+        // Call-site attribution: the job description when set, else the
+        // final stage's name (Spark's "collect at Foo.scala:123" form) —
+        // the per-job code-line evidence the gap analysis needs.
+        val desc = Option(e.properties)
+          .flatMap(p => Option(p.getProperty("spark.job.description")))
+          .orElse(e.stageInfos.lastOption.map(_.name))
+          .getOrElse("")
+        jobs.put(e.jobId, JobRec(desc, e.time))
+        e.stageIds.foreach(sid => stageToJob.put(sid, e.jobId))
+      }
+      override def onJobEnd(e: SparkListenerJobEnd): Unit = {
         active.decrementAndGet()
-    }
-    spark.sparkContext.addSparkListener(listener)
+        val r = jobs.get(e.jobId); if (r != null) r.end = e.time
+      }
+      override def onStageCompleted(e: SparkListenerStageCompleted): Unit = {
+        val r = jobs.get(stageToJob.getOrDefault(e.stageInfo.stageId, -1))
+        if (r != null) {
+          r.tasks += e.stageInfo.numTasks
+          r.stages += 1
+          r.taskTime += e.stageInfo.taskMetrics.executorRunTime
+        }
+      }
+    })
 
-    // Warmup mirroring Bench
-    try spark.read.parquet(s"$sfDir/customer.parquet")
-      .selectExpr("count(distinct c_custkey)").collect()
-    catch { case _: Throwable => () }
-    try SparkEntry.entry(spark).count()
-    catch { case _: Throwable => () }
+    GraftSession.warmUp(spark, sfDir)
 
     val mainThread = Thread.currentThread()
 
@@ -99,8 +120,11 @@ object ProfileGaps {
       val setup = SparkEntry.benchSetups.get(name)
       (1 to reps).foreach { rep =>
         setup.foreach(f => f(spark, sfDir))
-        val gapCounts = new java.util.concurrent.ConcurrentHashMap[String, Integer]()
-        val jobCounts = new java.util.concurrent.ConcurrentHashMap[String, Integer]()
+        // setup's job events must land before the table is cleared
+        Bridge.waitListenerBus(spark)
+        jobs.clear(); stageToJob.clear()
+        val gapCounts = new ConcurrentHashMap[String, Integer]()
+        val jobCounts = new ConcurrentHashMap[String, Integer]()
         @volatile var run = true
         @volatile var gapSamples = 0
         @volatile var jobSamples = 0
@@ -142,23 +166,34 @@ object ProfileGaps {
         val cm = org.apache.spark.metrics.source.CodegenMetrics
         val c0 = cm.METRIC_COMPILATION_TIME.getCount
         val t0 = System.nanoTime()
+        val t0ms = System.currentTimeMillis()
         sampler.start()
         fn(spark, sfDir).count()
         run = false
         sampler.join(500)
         val wall = (System.nanoTime() - t0) / 1e9
         val c1 = cm.METRIC_COMPILATION_TIME.getCount
-        println(f"[codegen] compilations this rep: ${c1 - c0} " +
-          f"(histogram count total $c1)")
-        import scala.jdk.CollectionConverters._
+        Bridge.waitListenerBus(spark)
+
+        val recs = jobs.values.asScala.toSeq.sortBy(_.start)
+        val jobSum = recs.map(r => math.max(0L, r.end - r.start)).sum / 1e3
         println(f"%n=== $name rep $rep: wall $wall%.3f s, " +
-          f"$gapSamples gap samples / $jobSamples in-job samples " +
-          "(main-thread stacks @2ms) ===")
-        println("-- gap samples (no job active):")
+          f"${recs.size} jobs ($jobSum%.3f s in jobs, " +
+          f"${wall - jobSum}%.3f s driver gaps), " +
+          f"${c1 - c0} codegen compilations ===")
+        println(f"${"t0+ms"}%8s ${"ms"}%7s ${"stg"}%4s ${"tasks"}%6s " +
+          f"${"exec_ms"}%8s  desc")
+        recs.foreach { r =>
+          val dur = math.max(0L, r.end - r.start)
+          println(f"${r.start - t0ms}%8d $dur%7d ${r.stages}%4d " +
+            f"${r.tasks}%6d ${r.taskTime}%8d  ${r.desc.take(90)}")
+        }
+        println(f"-- gap samples (no job active; $gapSamples samples " +
+          "of live stacks @2ms):")
         gapCounts.asScala.toSeq.sortBy(-_._2).take(18).foreach {
           case (k, c) => println(f"  $c%6d  $k")
         }
-        println("-- in-job samples (main thread while jobs run):")
+        println(f"-- in-job samples ($jobSamples samples):")
         jobCounts.asScala.toSeq.sortBy(-_._2).take(12).foreach {
           case (k, c) => println(f"  $c%6d  $k")
         }

@@ -2,10 +2,10 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.operators.{Pq, Similarity}
+import graft.operators.{Dedup, Pq, Similarity}
 
 /** Measured recall@k of every approximate ANN path against the exact
   * brute-force baseline, on the real testdata embeddings — written to
@@ -18,16 +18,20 @@ import graft.operators.{Pq, Similarity}
   *    same bucket/cell/codes by construction) is recovered in the top-5 —
   *    the recovery guarantee the driver oracles assert, measured here
   *    across every path.
+  *
+  * Then the parameter sweep on clustered synthetic embeddings, and the
+  * MinHash-LSH dedup recall per (bands, rowsPerBand) against the exact
+  * shingle Jaccard ([[Dedup.shingleJaccard]]) of planted near-copies.
+  *
+  * Usage: runMain graft.Recall [sfDir] [dedupSfDir] (default sf0.1 and
+  * sfDir). RECALL.md is generated at sf0.1 with the sf0.01 documents
+  * for the dedup section, at SPARK_GRAFT_CPUS=32.
   */
 object Recall {
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.1"
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val dedupDir = if (args.length > 1) args(1) else sfDir
+    val spark = GraftSession.tool("recall")
 
     val e = spark.read.parquet(s"$sfDir/embeddings.parquet")
       .select(col("vec_id"), col("embedding"))
@@ -179,6 +183,121 @@ the shortlisted vectors — the last sweep row) restores recall at a cost
 of shortlist/corpus exact work. The uniform table above is the honest
 worst case for pruning; this clustered table is the honest worst case
 for quantization-only ranking.
+""")
+
+    // ---- MinHash-LSH dedup recall vs exact shingle Jaccard -------------
+    // Real documents plus perturbed copies that drop the last
+    // ceil(p * words) words; each planted (copy, original) pair's
+    // candidate recall is binned by its exact Jaccard.
+    val nDocs = 600
+    val docs = spark.read.parquet(s"$dedupDir/documents.parquet")
+      .select("doc_id", "text").limit(nDocs).cache()
+    val levels = Seq(0.02, 0.05, 0.10, 0.20, 0.30)
+    val copies = levels.zipWithIndex.map { case (p, li) =>
+      val off = (li + 1) * 10000000L
+      docs.select(
+        (col("doc_id") + off).as("doc_id"),
+        expr(s"""array_join(slice(split(text, '\\\\s+'), 1,
+          greatest(1, cast(size(split(text, '\\\\s+')) * ${1 - p} as int))), ' ')""")
+          .as("text"),
+        col("doc_id").as("orig"))
+    }.reduce(_ unionByName _).cache()
+    val corpus = docs.unionByName(copies.select("doc_id", "text")).cache()
+    val truth = copies
+      .join(docs.select(col("doc_id").as("orig"), col("text").as("text_o")),
+        "orig")
+      .select(col("doc_id"), col("orig"),
+        Dedup.shingleJaccard(col("text"), col("text_o"), 3).as("j"))
+      .cache()
+    truth.count()
+
+    sb.append("\n## MinHash-LSH dedup recall (measured vs theory)\n\n")
+    sb.append(s"At $dedupDir: $nDocs real documents plus perturbed ")
+    sb.append("copies at five truncation levels (drop the last 2–30% of ")
+    sb.append("words), candidate recall of the planted pair measured ")
+    sb.append("against its EXACT 3-gram shingle Jaccard, per (bands, ")
+    sb.append("rowsPerBand), next to the S-curve theory 1−(1−J^r)^b at ")
+    sb.append("the bin's mean J:\n\n")
+    sb.append("| config | true J bin | pairs | measured recall | theory |\n")
+    sb.append("|---|---|---|---|---|\n")
+    val configs = Seq((8, 4), (8, 8), (16, 4), (16, 8), (32, 4))
+    configs.foreach { case (bands, rows) =>
+      val idx = Dedup.bandIndex(corpus, bands, rows)
+      val cand = idx.alias("a").join(idx.alias("b"),
+          col("a.band") === col("b.band") && col("a.bh") === col("b.bh") &&
+            col("a.doc_id") =!= col("b.doc_id"))
+        .select(col("a.doc_id").as("doc_id"), col("b.doc_id").as("orig"))
+        .dropDuplicates()
+      val hit = truth.join(cand, Seq("doc_id", "orig"), "left_semi")
+        .groupBy(floor(col("j") * 5).as("bin")).count()
+        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      val tot = truth.groupBy(floor(col("j") * 5).as("bin"))
+        .agg(count(lit(1)).as("n"), avg("j").as("jm"))
+        .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
+      tot.sortBy(_._1).foreach { case (bin, n, jm) =>
+        val rec = hit.getOrElse(bin, 0L).toDouble / n
+        val theory = 1.0 - math.pow(1.0 - math.pow(jm, rows), bands)
+        sb.append(f"| b=$bands, r=$rows | [${bin * 0.2}%.1f,${bin * 0.2 + 0.2}%.1f) " +
+          f"| $n | $rec%.2f | $theory%.2f |\n")
+        println(f"[recall] dedup b=$bands r=$rows bin=$bin n=$n " +
+          f"recall=$rec%.3f theory=$theory%.3f")
+      }
+    }
+    sb.append("""
+Measured recall tracks the S-curve within a few points in every bin
+with hundreds of pairs (the [0.4,0.6) bin holds 6 pairs, so one pair
+moves its recall by 0.17), so the curve can be TRUSTED for parameter
+choice at scale: pick (b, r) by
+putting the curve's knee at the dedup threshold — b=16,r=4 for a 0.6
+threshold (≥0.99 above 0.6, sharply lower below, 64 hashes), b=8,r=8
+when candidate cost matters more than borderline recall (its J^8
+steepness is also why `dedup_minhash`'s synthetic corpus uses r=8: tiny
+shared vocabulary inflates base Jaccard, and shorter bands would flood
+the buckets). Doubling bands (b=32) buys the [0.4,0.6) stragglers at 2x
+index size and bucket-join cost — rarely the right trade for a 0.5+
+threshold.
+
+## Candidate-pair growth vs data size (the sf1 adjudication)
+
+The sf1 scale family's two steepest rows — `embed_dups` 4.14× and
+`dedup_minhash` 3.58× under 10× data — are pair-stage growth. Whether
+that growth is benign depends on WHERE the pairs come from, and
+PairGrowthSpec now pins the mechanism for both generators:
+
+- **MinHash banding is density-driven, ≤ c·N on dup-free data.** Band
+  hashes are content hashes: on a 20k-doc corpus of independent random
+  token streams the banded self-join generates ~zero candidate pairs
+  (spec bound: ≤ N at 1×, ≤ 10N at 10× — actual counts sit near zero).
+  Every pair `dedup_minhash` pays for at sf1 is therefore a real
+  shared-content collision: the bench corpus plants dup pairs at a
+  fixed RATE, so 10× docs ⇒ 10× planted pairs, and each verify costs a
+  Jaccard over the pair's shingles — the 3.58× wall growth is the
+  dedup's actual work growing with dup density, not table².
+
+- **Hyperplane bucketing is quadratic under FIXED planes — planes are
+  a scale knob.** With `planes` fixed, buckets number 2^planes and
+  dup-free pairs grow ≈ N²/2^planes: the spec demonstrates >20×
+  candidate growth under 10× vectors at planes=6, then shows
+  re-bucketing the same 10× corpus at planes=10 (+log2 10) restores
+  ~linear growth. `embed_dups` at sf1 keeps the sf0.1 plane count, so
+  part of its 4.14× is exactly this N²/2^p term (analytically ~33k →
+  ~3.5M candidate cosines at these sizes — still cheap in absolute
+  terms, which is why the wall grew only 4.14×, but the term is
+  quadratic and would dominate at 100×). Operator guidance at scale:
+  grow `planes` with log2(N) to hold per-bucket occupancy constant
+  (the cosineDups cost model), or use `semDedup`'s k-means cells whose
+  count (`nlist`) is the same knob with density-following placement.
+
+- **r14: the discipline above is now the DEFAULT.** `cosineDups` with
+  no explicit `planes` derives planes = ⌈log₂ N⌉ − 4 from one cheap
+  corpus count (`Similarity.autoPlanes`), targeting ~16 expected
+  same-bucket partners at any scale — candidate pairs stay ≤ c·N as
+  the corpus grows (PairGrowthSpec pins pairs ≤ 2c·N at 1× and 10×
+  with exact planted recall at both). Pass an explicit count only to
+  trade compute for recall deliberately: FEWER planes widen buckets
+  (better recall on near-but-not-identical pairs, more cosines); the
+  default favors the linear-cost side because exact/scaled duplicates
+  collide at any plane count.
 """)
     Files.writeString(Paths.get("RECALL.md"), sb.toString)
     spark.stop()
