@@ -16,6 +16,13 @@ import graft.sources.Sources
   */
 object SparkEntry {
 
+  /** Directory the fixture-backed queries (manifest tables, derived
+    * views and indexes, written sources) build their tables under:
+    * cwd-relative by default; `DumpPlans` points it at a fixed
+    * absolute directory so the plans it records name the same paths in
+    * every checkout. */
+  @volatile private[graft] var fixtureDir: String = "target/qtmp"
+
   private def t(s: SparkSession, dir: String, name: String): DataFrame =
     s.read.parquet(s"$dir/$name.parquet")
 
@@ -216,7 +223,7 @@ object SparkEntry {
   private def resetManifestFixture(
       s: SparkSession, dir: String, name: String,
       withMerge: Boolean, numBuckets: Int = 32): String = synchronized {
-    val root = s"target/qtmp/$name"
+    val root = s"$fixtureDir/$name"
     val p = new org.apache.hadoop.fs.Path(root)
     p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
     graft.store.ManifestTable.create(
@@ -245,7 +252,7 @@ object SparkEntry {
     * set is closed-form for DuckDB. */
   private def resetTtlFixture(s: SparkSession, dir: String): String =
     synchronized {
-      val root = "target/qtmp/manifest_ttl"
+      val root = s"$fixtureDir/manifest_ttl"
       val p = new org.apache.hadoop.fs.Path(root)
       p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
       val c = t(s, dir, "customer")
@@ -263,7 +270,7 @@ object SparkEntry {
 
   private def ttlFixture(s: SparkSession, dir: String): String =
     synchronized {
-      if (fixtureReady(s"manifest_ttl@$dir")) "target/qtmp/manifest_ttl"
+      if (fixtureReady(s"manifest_ttl@$dir")) s"$fixtureDir/manifest_ttl"
       else resetTtlFixture(s, dir)
     }
 
@@ -272,7 +279,7 @@ object SparkEntry {
     * entry, so the reset and the query can never target different
     * paths. */
   private def resetSideRoot(s: SparkSession, name: String): String = {
-    val root = s"target/qtmp/$name"
+    val root = s"$fixtureDir/$name"
     val p = new org.apache.hadoop.fs.Path(root)
     p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
     root
@@ -288,8 +295,8 @@ object SparkEntry {
   /** The manifest_mv / manifest_index derived-table definitions —
     * shared by the query closures and their benchSetups bootstraps. */
   private def mvViewDef = graft.store.MaterializedView.View(
-    baseRoot = "target/qtmp/manifest_mv", baseSchema = upsertSchema,
-    baseKey = "id", viewRoot = "target/qtmp/manifest_mv_view",
+    baseRoot = s"$fixtureDir/manifest_mv", baseSchema = upsertSchema,
+    baseKey = "id", viewRoot = s"$fixtureDir/manifest_mv_view",
     groupCols = Seq("segment"), sumCols = Seq("acctbal_d"),
     minMaxCols = Seq("acctbal"),
     prep = df => df.withColumn("acctbal_d",
@@ -297,24 +304,24 @@ object SparkEntry {
     numBuckets = 8)
 
   private def ixDef = graft.store.SecondaryIndex.Index(
-    baseRoot = "target/qtmp/manifest_index", baseSchema = upsertSchema,
-    baseKey = "id", indexRoot = "target/qtmp/manifest_index_idx",
+    baseRoot = s"$fixtureDir/manifest_index", baseSchema = upsertSchema,
+    baseKey = "id", indexRoot = s"$fixtureDir/manifest_index_idx",
     valueCols = Seq("segment"), numBuckets = 4)
 
   /** The AUTO probe-join leg's index: NAME is near-unique, so a
     * selective dim's values resolve to a small base-key set — the
     * shape the optimizer rule prunes on. */
   private def ixAutoDef = graft.store.SecondaryIndex.Index(
-    baseRoot = "target/qtmp/manifest_index_probe_auto",
+    baseRoot = s"$fixtureDir/manifest_index_probe_auto",
     baseSchema = upsertSchema, baseKey = "id",
-    indexRoot = "target/qtmp/manifest_index_probe_auto_idx",
+    indexRoot = s"$fixtureDir/manifest_index_probe_auto_idx",
     valueCols = Seq("name"), numBuckets = 4)
 
   /** AutoIndexFilter's fixture index (same shape, own roots). */
   private def ixFilterDef = graft.store.SecondaryIndex.Index(
-    baseRoot = "target/qtmp/manifest_index_filter_auto",
+    baseRoot = s"$fixtureDir/manifest_index_filter_auto",
     baseSchema = upsertSchema, baseKey = "id",
-    indexRoot = "target/qtmp/manifest_index_filter_auto_idx",
+    indexRoot = s"$fixtureDir/manifest_index_filter_auto_idx",
     valueCols = Seq("name"), numBuckets = 4)
 
   /** HOT-VALUE sharded variant: `segment` has ~2 values over the whole
@@ -323,9 +330,9 @@ object SparkEntry {
     * stored row at ~1/8 of its value's keys and let refresh touch only
     * a changed key's own (value, shard) row. */
   private def ixShardedDef = graft.store.SecondaryIndex.Index(
-    baseRoot = "target/qtmp/manifest_index_sharded",
+    baseRoot = s"$fixtureDir/manifest_index_sharded",
     baseSchema = upsertSchema, baseKey = "id",
-    indexRoot = "target/qtmp/manifest_index_sharded_idx",
+    indexRoot = s"$fixtureDir/manifest_index_sharded_idx",
     valueCols = Seq("segment"), numBuckets = 4, numShards = 8)
 
   /** The `*_fixed` scale-validation variants: sum-only view (so the
@@ -336,16 +343,16 @@ object SparkEntry {
     * lists proportional to the TABLE, which is the anti-pattern the
     * fixed variant must not measure). */
   private def mvFixedViewDef = graft.store.MaterializedView.View(
-    baseRoot = "target/qtmp/manifest_mv_fixed", baseSchema = upsertSchema,
-    baseKey = "id", viewRoot = "target/qtmp/manifest_mv_fixed_view",
+    baseRoot = s"$fixtureDir/manifest_mv_fixed", baseSchema = upsertSchema,
+    baseKey = "id", viewRoot = s"$fixtureDir/manifest_mv_fixed_view",
     groupCols = Seq("segment"), sumCols = Seq("acctbal_d"), minMaxCols = Nil,
     prep = df => df.withColumn("acctbal_d",
       col("acctbal").cast("decimal(30,2)")),
     numBuckets = 8)
 
   private def ixFixedDef = graft.store.SecondaryIndex.Index(
-    baseRoot = "target/qtmp/manifest_index_fixed", baseSchema = upsertSchema,
-    baseKey = "id", indexRoot = "target/qtmp/manifest_index_fixed_idx",
+    baseRoot = s"$fixtureDir/manifest_index_fixed", baseSchema = upsertSchema,
+    baseKey = "id", indexRoot = s"$fixtureDir/manifest_index_fixed_idx",
     valueCols = Seq("name"), numBuckets = 8)
 
   /** RANGE-layout index on the near-unique `name` column: bucket
@@ -357,8 +364,8 @@ object SparkEntry {
     * be bounded by the hits, never the table — the classic sorted
     * secondary index contract. */
   private def ixRangeDef = graft.store.SecondaryIndex.Index(
-    baseRoot = "target/qtmp/manifest_index_range", baseSchema = upsertSchema,
-    baseKey = "id", indexRoot = "target/qtmp/manifest_index_range_idx",
+    baseRoot = s"$fixtureDir/manifest_index_range", baseSchema = upsertSchema,
+    baseKey = "id", indexRoot = s"$fixtureDir/manifest_index_range_idx",
     valueCols = Seq("name"), numBuckets = 8, rangeLayout = true)
 
   private val RangeProbeLo = "Customer#000000100"
@@ -370,8 +377,8 @@ object SparkEntry {
     * The view table keys on the injective encoded (segment, nation_g)
     * tuple; refresh cost is unchanged — still ∝ feed-touched groups. */
   private def mvMultiViewDef = graft.store.MaterializedView.View(
-    baseRoot = "target/qtmp/manifest_mv_multi", baseSchema = upsertSchema,
-    baseKey = "id", viewRoot = "target/qtmp/manifest_mv_multi_view",
+    baseRoot = s"$fixtureDir/manifest_mv_multi", baseSchema = upsertSchema,
+    baseKey = "id", viewRoot = s"$fixtureDir/manifest_mv_multi_view",
     groupCols = Seq("segment", "nation_g"), sumCols = Seq("acctbal_d"),
     minMaxCols = Seq("acctbal"),
     prep = df => df
@@ -389,7 +396,7 @@ object SparkEntry {
   private def manifestFixture(
       s: SparkSession, dir: String, name: String,
       withMerge: Boolean, numBuckets: Int = 32): String = synchronized {
-    if (fixtureReady(s"$name@$dir")) s"target/qtmp/$name"
+    if (fixtureReady(s"$name@$dir")) s"$fixtureDir/$name"
     else resetManifestFixture(s, dir, name, withMerge, numBuckets)
   }
 
@@ -422,7 +429,7 @@ object SparkEntry {
     * not the source read. */
   private def jsonlFixture(s: SparkSession, dir: String): String =
     synchronized {
-      val root = "target/qtmp/jsonl_source"
+      val root = s"$fixtureDir/jsonl_source"
       if (!fixtureReady(s"jsonl_source@$dir")) {
         val p = new org.apache.hadoop.fs.Path(root)
         p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
@@ -437,7 +444,7 @@ object SparkEntry {
 
   private def avroFixture(s: SparkSession, dir: String): String =
     synchronized {
-      val root = "target/qtmp/avro_source"
+      val root = s"$fixtureDir/avro_source"
       if (!fixtureReady(s"avro_source@$dir")) {
         graft.sources.Avro.write(
           t(s, dir, "documents")
@@ -452,7 +459,7 @@ object SparkEntry {
 
   private def orcFixture(s: SparkSession, dir: String): String =
     synchronized {
-      val root = "target/qtmp/orc_source"
+      val root = s"$fixtureDir/orc_source"
       if (!fixtureReady(s"orc_source@$dir")) {
         val p = new org.apache.hadoop.fs.Path(root)
         p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
@@ -472,7 +479,7 @@ object SparkEntry {
   private def writeFormatFixture(s: SparkSession, dir: String): String =
     synchronized {
       val key = s"manifest_write_format@$dir"
-      val root = "target/qtmp/manifest_write_format"
+      val root = s"$fixtureDir/manifest_write_format"
       if (!fixtureReady(key)) {
         val p = new org.apache.hadoop.fs.Path(root)
         p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
@@ -497,7 +504,7 @@ object SparkEntry {
   private def ordersSideTable(s: SparkSession, dir: String): String =
     synchronized {
       val key = s"manifest_scan_orders@$dir"
-      val root = "target/qtmp/manifest_scan_orders"
+      val root = s"$fixtureDir/manifest_scan_orders"
       if (!fixtureReady(key)) {
         val p = new org.apache.hadoop.fs.Path(root)
         p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
@@ -742,7 +749,7 @@ object SparkEntry {
       resetManifestFixture(s, dir, "manifest_auto_maintain",
         withMerge = true)
       graft.store.ManifestTable.autoMaintain(s,
-        "target/qtmp/manifest_auto_maintain", zones = Seq("acctbal"))
+        s"$fixtureDir/manifest_auto_maintain", zones = Seq("acctbal"))
       sideReady += "manifest_auto_maintain_decl"
     }),
     "manifest_zone_clustered" -> ((s, dir) => {
@@ -952,7 +959,7 @@ object SparkEntry {
       val csv = "nationkey,name,regionkey\n" + rows.map { r =>
         s"""${r.get(0)},"${r.get(1)}",${r.get(2)}"""
       }.mkString("\n") + "\n"
-      val dirPath = java.nio.file.Paths.get("/root/repo/target/verify_tmp")
+      val dirPath = java.nio.file.Paths.get(s"$fixtureDir/csv")
       java.nio.file.Files.createDirectories(dirPath)
       val f = dirPath.resolve("nation.csv")
       java.nio.file.Files.writeString(f, csv)
@@ -976,7 +983,7 @@ object SparkEntry {
       val csv = "nationkey,name,regionkey\n" + rows.map { r =>
         s"""${r.get(0)},"${r.get(1)}\n${r.get(1)}",${r.get(2)}"""
       }.mkString("\n") + "\n"
-      val dirPath = java.nio.file.Paths.get("/root/repo/target/verify_tmp")
+      val dirPath = java.nio.file.Paths.get(s"$fixtureDir/csv")
       java.nio.file.Files.createDirectories(dirPath)
       val f = dirPath.resolve("nation_multiline.csv")
       java.nio.file.Files.writeString(f, csv)
@@ -1518,7 +1525,7 @@ object SparkEntry {
       // cost ∝ both sides' change since the bind, never table size.
       val root = manifestFixture(s, dir, "manifest_merge_branch",
         withMerge = true)
-      val br = "target/qtmp/manifest_merge_branch_br"
+      val br = s"$fixtureDir/manifest_merge_branch_br"
       if (!sideReady.contains("manifest_merge_branch_br")) {
         resetSideRoot(s, "manifest_merge_branch_br")
         graft.store.ManifestTable.cloneAt(s, root, br, pin = false)
@@ -1591,7 +1598,7 @@ object SparkEntry {
       // cost of one manifest write.
       val root = manifestFixture(s, dir, "manifest_clone",
         withMerge = true)
-      val dst = "target/qtmp/manifest_clone_dst"
+      val dst = s"$fixtureDir/manifest_clone_dst"
       if (!sideReady.contains("manifest_clone_dst")) {
         resetSideRoot(s, "manifest_clone_dst")
         graft.store.ManifestTable.cloneAt(s, root, dst, pin = false)
@@ -1919,7 +1926,7 @@ object SparkEntry {
       GraftExtensions.register(s)
       s.conf.set("spark.sql.catalog.graft", "graft.store.GraftCatalog")
       s.conf.set("spark.sql.catalog.graft.warehouse",
-        "target/qtmp/graft_warehouse")
+        s"$fixtureDir/graft_warehouse")
       s.sql("CREATE NAMESPACE IF NOT EXISTS graft.bench")
       s.sql("DROP TABLE IF EXISTS graft.bench.customers")
       s.sql("""CREATE TABLE graft.bench.customers
@@ -1978,7 +1985,7 @@ object SparkEntry {
       GraftExtensions.register(s)
       s.conf.set("spark.sql.catalog.graft", "graft.store.GraftCatalog")
       s.conf.set("spark.sql.catalog.graft.warehouse",
-        "target/qtmp/graft_warehouse")
+        s"$fixtureDir/graft_warehouse")
       s.sql("CREATE NAMESPACE IF NOT EXISTS graft.bench")
       s.sql("DROP TABLE IF EXISTS graft.bench.cust_dml")
       s.sql("""CREATE TABLE graft.bench.cust_dml
@@ -2017,8 +2024,8 @@ object SparkEntry {
       GraftExtensions.register(s)
       s.conf.set("spark.sql.catalog.graft", "graft.store.GraftCatalog")
       s.conf.set("spark.sql.catalog.graft.warehouse",
-        "target/qtmp/graft_warehouse")
-      val root = "target/qtmp/graft_path_dml"
+        s"$fixtureDir/graft_warehouse")
+      val root = s"$fixtureDir/graft_path_dml"
       resetSideRoot(s, "graft_path_dml")
       val t = s"graft.`$root`"
       s.sql(s"""CREATE TABLE $t (id BIGINT, name STRING, acctbal DOUBLE)

@@ -17,17 +17,20 @@ case object CreateAndUpdate extends ImportMode {
   val canCreate = true; val canUpdate = true
 }
 
-/** Outputs of one upsert pass. All four DataFrames derive from the same
+/** Outputs of one upsert pass. All DataFrames derive from the same
   * single-join plan, exposed as `joined`: persist it (and unpersist when
   * done) when you consume several outputs, so the join — and the target
   * scan under it — evaluates once instead of once per output.
+  * `upserted` is the part of `merged` whose key the source carries (the
+  * created and the matched rows): exactly the rows a delta write keeps.
   */
 final case class UpsertResult(
     merged: DataFrame,
     history: DataFrame,
     notFound: DataFrame,
     stats: DataFrame,
-    joined: DataFrame)
+    joined: DataFrame,
+    upserted: DataFrame)
 
 /** Key-matched upsert — the Spark re-expression of the reference's import
   * loop (importtask.py:197-344).
@@ -50,11 +53,14 @@ final case class UpsertResult(
   * cancelled. The same semantics here, in one `_line`-ordered aggregation
   * per key (see `dedupAgg`) followed by change-detection against the
   * target. `max_by`/`min_by` over string and array buffers cannot
-  * hash-aggregate, so the dedup plans as a sort aggregate with map-side
-  * partials: `Sort → SortAggregate(partial) → Exchange(key) → Sort →
-  * SortAggregate(final)`, then the exchange on the key into the target's
-  * buckets and a sort-merge join (the `bulk_import` merge's plan). The
-  * partials still shrink duplicate keys before the first exchange.
+  * hash-aggregate, so the dedup plans as a sort aggregate: over a plain
+  * source, `Sort → SortAggregate(partial) → Exchange(key) → Sort →
+  * SortAggregate(final)` and a sort-merge join. A source already hash-
+  * partitioned on the normalized key plans neither exchange: the
+  * bucket-aligned `ManifestTable.merge` (the `bulk_import` plan) passes
+  * its one source exchange, so the dedup is `Sort → SortAggregate` over
+  * that shuffle's read and the full-outer join meets the bucketed
+  * target scan partition by partition.
   */
 object Upsert {
 
@@ -208,6 +214,8 @@ object Upsert {
       }
     }
     val merged = flags.filter(keepRow).select(mergedCols: _*)
+    val upserted = flags.filter(keepRow && col("_in_src"))
+      .select(mergedCols: _*)
 
     // --- history (importtask.py:313-344): one wide row per updated item
     // with old_/new_ pairs for each keep_history column that changed. ------
@@ -259,7 +267,7 @@ object Upsert {
         .as("ignored_missing_id"),
       sum(when(col("_ign"), 1L).otherwise(0L)).as("ignored")))
 
-    UpsertResult(merged, history, notFound, stats, flags)
+    UpsertResult(merged, history, notFound, stats, flags, upserted)
   }
 }
 

@@ -1100,7 +1100,10 @@ object ManifestTable {
     *   the bucket edge — so within a bucket, file c-ranges are disjoint
     *   by construction, which is exactly what per-file zone maps need
     *   to prune. Its entries are `sorted`, the drift signal
-    *   [[recluster]] reads. */
+    *   [[recluster]] reads.
+    * `aligned` says `df`'s partition p already holds exactly bucket p's
+    * rows (the bucket-aligned merge): no exchange, and each bucket is
+    * still ONE key-sorted file. */
   private def writeBuckets(
       df: DataFrame,
       bucket: org.apache.spark.sql.Column,
@@ -1112,7 +1115,8 @@ object ManifestTable {
         identity,
       seq: Long = 0L,
       colMap: Seq[(String, String)] = Nil,
-      cluster: Option[org.apache.spark.sql.Column] = None): Seq[FileEntry] = {
+      cluster: Option[org.apache.spark.sql.Column] = None,
+      aligned: Boolean = false): Seq[FileEntry] = {
     val spark = df.sparkSession
     val dataDir = s"$root/data/$dataDirName"
     // Column mapping: files ALWAYS store the physical names, so a
@@ -1215,6 +1219,8 @@ object ManifestTable {
     // changes no semantics (readers never assume order).
     val bucketed = guarded.withColumn(BucketCol, bucket)
     val laidOut = cluster match {
+      case None if aligned =>
+        bucketed.sortWithinPartitions(col(BucketCol), norm)
       case None =>
         bucketed.repartition(math.max(1, numTasks), col(BucketCol))
           .sortWithinPartitions(col(BucketCol), norm)
@@ -1499,6 +1505,32 @@ object ManifestTable {
     }
   }
 
+  /** Name of the merge's observation of the source rows its exchange
+    * drops (should_import ignores and null keys), for the stats row. */
+  private val DroppedRows = "graft_merge_dropped"
+
+  /** Whether a merge into `prior` can run bucket-aligned: a plain hash
+    * layout (no range bounds, no splits) keyed by the identity
+    * comparator, at most `bucketing.maxBuckets` buckets, and — when it
+    * holds rows — one stamped file per bucket, so the touched buckets'
+    * fragment scan reports a BucketSpec ([[GraftScan.bucketSpecOf]]).
+    * That is the condition under which the merge's join already ran
+    * `n` tasks; anything else (multi-file buckets a delta merge or a
+    * DML left, a recorded normalizer) keeps the touched-bucket scan. */
+  private def bucketAligned(prior: Option[Manifest], n: Int,
+      keyExprRec: Option[String],
+      schema: org.apache.spark.sql.types.StructType): Boolean =
+    keyExprRec.contains("") &&
+      n <= org.apache.spark.sql.internal.SQLConf.get.bucketingMaxBuckets &&
+      prior.forall { m =>
+        m.rangeBounds.isEmpty && m.splits.isEmpty && m.keyExpr.isEmpty &&
+        (m.entries.isEmpty ||
+          GraftScan.bucketSpecOf(m, m.entries,
+            toPhysicalSchema(m, recordableSchema(prior, schema))).isDefined &&
+          m.entries.groupBy(_.bucket).forall { case (_, es) =>
+            es.size == 1 && !es.head.tomb })
+      }
+
   /** One incremental MERGE of a projected source into the table.
     * `(streamId, batchId)` is the merge's IDEMPOTENCY TOKEN, not the
     * table version: foreachBatch passes its batchId (plus the checkpoint
@@ -1583,18 +1615,45 @@ object ManifestTable {
           Some(col(Mapping.IgnoreCol))
         else None
 
-      // 1. touched buckets: bounded distinct over ≤ n values, never a key
-      //    collect. Null-keyed source rows are dropped by the upsert, so
-      //    they must not mark buckets either — and the null filter has to
-      //    run BEFORE bucketing (hash(null) is the seed, not null, so a
-      //    null key would otherwise always touch bucket pmod(seed, n)).
-      val touched = graft.helpers.JobLabel.withDesc(spark,
-          s"graft.merge $root v$version: touched-bucket scan") {
-        ignore.foldLeft(projected)((df, c) =>
-            df.filter(!coalesce(c, lit(false))))
-          .filter(mapping.keyComparator(col(key)).isNotNull)
-          .select(bucketOf(col(key)).as(BucketCol))
-          .distinct().collect().map(_.getInt(0)).toSet
+      // Only rows that take part mark buckets: null-keyed source rows are
+      // dropped by the upsert too, and the null filter has to run BEFORE
+      // bucketing (hash(null) is the seed, not null, so a null key would
+      // otherwise always touch bucket pmod(seed, n)).
+      val norm = mapping.keyComparator(col(key))
+      val ignored = ignore.fold(lit(false))(c => coalesce(c, lit(false)))
+      val takesPart = !ignored && norm.isNotNull
+      // 1. the source, and the touched buckets. A plain hash layout whose
+      //    target scan reports a BucketSpec ([[bucketAligned]]) exchanges
+      //    the taking-part rows ONCE on hashpartitioning(norm, n) — the
+      //    partition formula is bucketExpr's, so partition p holds
+      //    exactly bucket p — and reads the touched set off that job's
+      //    map-output sizes. The rows the filter drops are counted in the
+      //    same job when stats are recorded. Range and split layouts
+      //    (and a source the planner finds already partitioned) take a
+      //    bounded distinct over ≤ n bucket values, never a key collect.
+      val exchanged =
+        if (!bucketAligned(prior, n, keyExprRec, schema)) None
+        else graft.helpers.JobLabel.withDesc(spark,
+            s"graft.merge $root v$version: source exchange") {
+          org.apache.spark.sql.graft.Bridge.exchangeOnce(
+            (if (!recordStats) projected
+             else projected.observe(DroppedRows,
+               coalesce(sum(when(ignored, 1L)), lit(0L)).as("ignored"),
+               coalesce(sum(when(!ignored && norm.isNull, 1L)), lit(0L))
+                 .as("ignored_missing_id")))
+              .filter(takesPart),
+            Seq(norm), n)
+        }
+      val (source, touched) = exchanged match {
+        case Some(ex) =>
+          (ex.frame, ex.bytes.indices.filter(ex.bytes(_) > 0).toSet)
+        case None =>
+          (projected, graft.helpers.JobLabel.withDesc(spark,
+              s"graft.merge $root v$version: touched-bucket scan") {
+            projected.filter(takesPart)
+              .select(bucketOf(col(key)).as(BucketCol))
+              .distinct().collect().map(_.getInt(0)).toSet
+          })
       }
       val (touchedEntries, untouched) =
         prior.map(_.entries).getOrElse(Nil).partition(e => touched(e.bucket))
@@ -1606,46 +1665,48 @@ object ManifestTable {
       // non-nullable column (INSERT ... VALUES literals) that older
       // files don't have at all — reading them under the tightened
       // schema makes the vectorized parquet reader refuse the file.
+      // Aligned, the fragment scan is bucketed like the exchanged
+      // source, so the dedup and the join plan no Exchange, and join
+      // partition p is bucket p.
       val fragment = reconciledRead(spark, root,
         recordableSchema(prior, schema),
         prior.getOrElse(Manifest(-1L, n, Nil)), touchedEntries,
         key, mapping.keyComparator)
-      val res = Upsert(fragment, projected, mapping, mode, nonNullable,
+      val res = Upsert(fragment, source, mapping, mode, nonNullable,
         rejectWhen, ignore)
+      // The exchanged source holds only the rows that take part; the two
+      // counters of the rows it dropped come from the exchange job.
+      val stats = exchanged.flatMap(_.observed.get(DroppedRows)) match {
+        case Some(r) => res.stats
+          .withColumn("ignored_missing_id",
+            lit(r.getAs[Long]("ignored_missing_id")))
+          .withColumn("ignored", lit(r.getAs[Long]("ignored")))
+        case None => res.stats
+      }
       val tracked = mapping.columns.exists(_._2.opts.keepHistory)
       val writesHistory = tracked && mode.canUpdate
       val multiOut = writesHistory || recordStats
       // merged/history/stats all derive from the ONE full-outer join; with
       // several consumers, persist it once instead of re-reading the
       // fragment and re-aggregating the source per output (UpsertResult's
-      // own contract, Upsert.scala:20-23).
+      // own contract).
       if (multiOut) res.joined.persist()
       val committed =
         try {
           // 4-5. write ONLY the touched buckets under this attempt's
           //    directory (one file per bucket, its stats observed inside
-          //    the write job — [[writeBuckets]]), then the atomic
-          //    no-overwrite manifest swap. In delta mode just the batch's
-          //    own post-merge rows are written (the semi-join keeps the
-          //    batch-key rows of the merged fragment; Catalyst broadcasts
-          //    the key side when the batch is small — the delta-mode
-          //    premise) and the touched buckets' existing files stay live.
-          val toWrite =
-            if (!delta) res.merged
-            else {
-              val batchKeys = ignore.foldLeft(projected)((df, c) =>
-                  df.filter(!coalesce(c, lit(false))))
-                .filter(mapping.keyComparator(col(key)).isNotNull)
-                .select(mapping.keyComparator(col(key)).as("_bk"))
-                .distinct()
-              res.merged.join(batchKeys,
-                mapping.keyComparator(res.merged(key)) === batchKeys("_bk"),
-                "left_semi")
-            }
+          //    the write job — [[writeBuckets]]; aligned, without an
+          //    exchange), then the atomic no-overwrite manifest swap. In
+          //    delta mode just the batch's own post-merge rows are
+          //    written — the merged rows whose key the source carries,
+          //    a filter on the one join — and the touched buckets'
+          //    existing files stay live.
+          val toWrite = if (delta) res.upserted else res.merged
           val written = writeBuckets(toWrite, bucketOf(col(key)), key,
             root, s"v$version-$attempt", math.max(touched.size, 1),
             mapping.keyComparator, seq = version,
-            colMap = prior.map(_.colMap).getOrElse(Nil))
+            colMap = prior.map(_.colMap).getOrElse(Nil),
+            aligned = exchanged.isDefined)
 
           // keep_history rows and import stats are part of the same commit:
           // written under attempt-scoped directories BEFORE the manifest
@@ -1660,7 +1721,7 @@ object ManifestTable {
             res.history.write.mode("overwrite")
               .parquet(s"$root/history/v$version-$attempt")
           if (recordStats)
-            res.stats.write.mode("overwrite")
+            stats.write.mode("overwrite")
               .parquet(s"$root/stats/v$version-$attempt")
 
           val live = untouched ++

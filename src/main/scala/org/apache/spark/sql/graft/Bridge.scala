@@ -1,8 +1,13 @@
 package org.apache.spark.sql.graft
 
-import org.apache.spark.sql.Column
+import scala.concurrent.duration.Duration
+
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.classic.ExpressionUtils
+import org.apache.spark.sql.execution.{CollectMetricsExec, LogicalRDD,
+  QueryExecution}
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 
 /** Bridge between graft's custom Catalyst [[Expression]]s and the public
   * [[Column]] API. Spark 4 wraps columns in `ColumnNode`s; the conversion
@@ -24,6 +29,46 @@ object Bridge {
   def observationFuture(obs: org.apache.spark.sql.Observation)
       : scala.concurrent.Future[org.apache.spark.sql.Row] =
     obs.future
+
+  /** A frame exchanged ONCE, its map stage already run: `frame` reads
+    * the materialized shuffle and declares its `HashPartitioning`, so an
+    * aggregate or a join on the same keys over it plans no further
+    * Exchange; `bytes(p)` is partition p's shuffle size (0 iff p holds
+    * no row); `observed` holds the metric row of each named `observe`
+    * in the exchanged plan. */
+  final case class Exchanged(
+      frame: DataFrame, bytes: Array[Long], observed: Map[String, Row])
+
+  /** Exchanges `df` on `hashpartitioning(keys, n)` and runs the map
+    * stage as one job (`submitShuffleJob`, whose `MapOutputStatistics`
+    * give the per-partition bytes); partition p then holds exactly the
+    * rows with `pmod(murmur3(keys), n) = p`. The exchange is planned
+    * without AQE (`prepareExecutedPlan`, the subquery preparation):
+    * under AQE a materialized empty stage is replaced by an empty
+    * relation, taking its statistics and observed metrics with it, and
+    * an AQE plan reports `UnknownPartitioning`. None when the planner
+    * removed the exchange (a source already partitioned that way). */
+  def exchangeOnce(df: DataFrame, keys: Seq[Column], n: Int)
+      : Option[Exchanged] = {
+    val ds = df.repartition(n, keys: _*)
+      .asInstanceOf[org.apache.spark.sql.classic.Dataset[Row]]
+    val session = ds.sparkSession
+    QueryExecution.prepareExecutedPlan(session, ds.queryExecution.sparkPlan)
+    match {
+      case e: ShuffleExchangeExec if e.outputPartitioning.numPartitions == n =>
+        val st = org.apache.spark.util.ThreadUtils.awaitResult(
+          e.submitShuffleJob(), Duration.Inf)
+        val observed = e.collect {
+          case c: CollectMetricsExec => c.name -> c.collectedMetrics }.toMap
+        val rel = LogicalRDD(e.output, e.execute(), e.outputPartitioning,
+          Nil, isStreaming = false)(session)
+        Some(Exchanged(org.apache.spark.sql.classic.Dataset.ofRows(session,
+            rel),
+          if (st == null) Array.fill(n)(0L) else st.bytesByPartitionId,
+          observed))
+      case _ => None
+    }
+  }
 
   /** Catalyst predicate → v1 `sources.Filter` (`protected[sql]` in
     * DataSourceStrategy): lets the DML strategy ask the same question
