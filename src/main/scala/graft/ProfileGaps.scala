@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.scheduler._
+import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
 import org.apache.spark.sql.graft.Bridge
 import java.util.concurrent.ConcurrentHashMap
 import java.util.concurrent.atomic.AtomicInteger
@@ -12,9 +13,9 @@ import scala.jdk.CollectionConverters._
   * two views of the timed region per rep:
   *
   *  - the job table: every Spark job's wall span, stages, tasks and
-  *    executor-time sum, with its call site, and the split of the wall
-  *    into job spans vs driver-side gaps — on local[32] with sf0.1
-  *    fixtures most queries are gap/scheduling-bound;
+  *    executor-time sum, with what ran it ([[JobTable]]), and the split
+  *    of the wall into job spans vs driver-side gaps — on local[32] with
+  *    sf0.1 fixtures most queries are gap/scheduling-bound;
   *  - what the driver is DOING in the gaps: a sampler thread polls every
   *    live thread's stack every few ms; samples taken while zero Spark
   *    jobs are active are gap samples, aggregated by their most
@@ -27,9 +28,60 @@ import scala.jdk.CollectionConverters._
   * OPTIMIZATION_r15.md and OPTIMIZATION_r16.md ran at SPARK_GRAFT_CPUS=32.)
   */
 object ProfileGaps {
-  private final case class JobRec(
-      desc: String, start: Long, var end: Long = 0L,
+  /** One Spark job: `desc` names it, `via` says how — "job" (its job
+    * description), "sql" (its SQL execution) or "site" (its final
+    * stage's call site). */
+  private[graft] final case class JobRec(
+      desc: String, via: String, start: Long, var end: Long = 0L,
       var tasks: Int = 0, var taskTime: Long = 0L, var stages: Int = 0)
+
+  /** The job table's listener. A job is attributed to its job
+    * description when set, else to its SQL execution — the jobs AQE
+    * submits from its pool threads carry no description and a pool-thread
+    * call site, but they do carry `spark.sql.execution.id`, and that
+    * execution's start event names the action that ran it — else to its
+    * final stage's name (Spark's "collect at Foo.scala:123" form). */
+  private[graft] final class JobTable extends SparkListener {
+    val active = new AtomicInteger(0)
+    val jobs = new ConcurrentHashMap[Int, JobRec]()
+    private val stageToJob = new ConcurrentHashMap[Int, Int]()
+    private val executions = new ConcurrentHashMap[Long, String]()
+
+    def clear(): Unit = {
+      jobs.clear(); stageToJob.clear(); executions.clear()
+    }
+
+    override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+      case s: SparkListenerSQLExecutionStart =>
+        executions.put(s.executionId, s.description)
+      case _ => ()
+    }
+    override def onJobStart(e: SparkListenerJobStart): Unit = {
+      active.incrementAndGet()
+      def prop(k: String) = Option(e.properties).flatMap(p =>
+        Option(p.getProperty(k))).filter(_.nonEmpty)
+      val rec = prop("spark.job.description").map(JobRec(_, "job", e.time))
+        .orElse(prop("spark.sql.execution.id")
+          .flatMap(id => Option(executions.get(id.toLong))
+            .map(d => JobRec(s"sql $id: $d", "sql", e.time))))
+        .getOrElse(JobRec(e.stageInfos.lastOption.map(_.name).getOrElse(""),
+          "site", e.time))
+      jobs.put(e.jobId, rec)
+      e.stageIds.foreach(sid => stageToJob.put(sid, e.jobId))
+    }
+    override def onJobEnd(e: SparkListenerJobEnd): Unit = {
+      active.decrementAndGet()
+      val r = jobs.get(e.jobId); if (r != null) r.end = e.time
+    }
+    override def onStageCompleted(e: SparkListenerStageCompleted): Unit = {
+      val r = jobs.get(stageToJob.getOrDefault(e.stageInfo.stageId, -1))
+      if (r != null) {
+        r.tasks += e.stageInfo.numTasks
+        r.stages += 1
+        r.taskTime += e.stageInfo.taskMetrics.executorRunTime
+      }
+    }
+  }
 
   def main(args: Array[String]): Unit = {
     val names = args(0).split(",").map(_.trim).filter(_.nonEmpty)
@@ -37,35 +89,9 @@ object ProfileGaps {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val spark = GraftSession.tool("profile")
 
-    val active = new AtomicInteger(0)
-    val jobs = new ConcurrentHashMap[Int, JobRec]()
-    val stageToJob = new ConcurrentHashMap[Int, Int]()
-    spark.sparkContext.addSparkListener(new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = {
-        active.incrementAndGet()
-        // Call-site attribution: the job description when set, else the
-        // final stage's name (Spark's "collect at Foo.scala:123" form) —
-        // the per-job code-line evidence the gap analysis needs.
-        val desc = Option(e.properties)
-          .flatMap(p => Option(p.getProperty("spark.job.description")))
-          .orElse(e.stageInfos.lastOption.map(_.name))
-          .getOrElse("")
-        jobs.put(e.jobId, JobRec(desc, e.time))
-        e.stageIds.foreach(sid => stageToJob.put(sid, e.jobId))
-      }
-      override def onJobEnd(e: SparkListenerJobEnd): Unit = {
-        active.decrementAndGet()
-        val r = jobs.get(e.jobId); if (r != null) r.end = e.time
-      }
-      override def onStageCompleted(e: SparkListenerStageCompleted): Unit = {
-        val r = jobs.get(stageToJob.getOrDefault(e.stageInfo.stageId, -1))
-        if (r != null) {
-          r.tasks += e.stageInfo.numTasks
-          r.stages += 1
-          r.taskTime += e.stageInfo.taskMetrics.executorRunTime
-        }
-      }
-    })
+    val table = new JobTable
+    val active = table.active
+    spark.sparkContext.addSparkListener(table)
 
     GraftSession.warmUp(spark, sfDir)
 
@@ -122,7 +148,7 @@ object ProfileGaps {
         setup.foreach(f => f(spark, sfDir))
         // setup's job events must land before the table is cleared
         Bridge.waitListenerBus(spark)
-        jobs.clear(); stageToJob.clear()
+        table.clear()
         val gapCounts = new ConcurrentHashMap[String, Integer]()
         val jobCounts = new ConcurrentHashMap[String, Integer]()
         @volatile var run = true
@@ -175,7 +201,7 @@ object ProfileGaps {
         val c1 = cm.METRIC_COMPILATION_TIME.getCount
         Bridge.waitListenerBus(spark)
 
-        val recs = jobs.values.asScala.toSeq.sortBy(_.start)
+        val recs = table.jobs.values.asScala.toSeq.sortBy(_.start)
         val jobSum = recs.map(r => math.max(0L, r.end - r.start)).sum / 1e3
         println(f"%n=== $name rep $rep: wall $wall%.3f s, " +
           f"${recs.size} jobs ($jobSum%.3f s in jobs, " +

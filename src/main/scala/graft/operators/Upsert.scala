@@ -58,9 +58,10 @@ final case class UpsertResult(
   * SortAggregate(final)` and a sort-merge join. A source already hash-
   * partitioned on the normalized key plans neither exchange: the
   * bucket-aligned `ManifestTable.merge` (the `bulk_import` plan) passes
-  * its one source exchange, so the dedup is `Sort → SortAggregate` over
-  * that shuffle's read and the full-outer join meets the bucketed
-  * target scan partition by partition.
+  * its one source exchange and its bucketed target scan, both read as
+  * the same g bucket groups (task i holds the buckets ≡ i (mod g)), so
+  * the dedup is `Sort → SortAggregate` over that shuffle's read and the
+  * full-outer join meets the target partition by partition.
   */
 object Upsert {
 

@@ -1101,9 +1101,10 @@ object ManifestTable {
     *   by construction, which is exactly what per-file zone maps need
     *   to prune. Its entries are `sorted`, the drift signal
     *   [[recluster]] reads.
-    * `aligned` says `df`'s partition p already holds exactly bucket p's
-    * rows (the bucket-aligned merge): no exchange, and each bucket is
-    * still ONE key-sorted file. */
+    * `aligned` says each bucket's rows already sit in one partition of
+    * `df` — in the bucket-aligned merge, partition p of g holds the
+    * buckets ≡ p (mod g): no exchange, and each bucket is still ONE
+    * key-sorted file. */
   private def writeBuckets(
       df: DataFrame,
       bucket: org.apache.spark.sql.Column,
@@ -1511,16 +1512,17 @@ object ManifestTable {
 
   /** Whether a merge into `prior` can run bucket-aligned: a plain hash
     * layout (no range bounds, no splits) keyed by the identity
-    * comparator, at most `bucketing.maxBuckets` buckets, and — when it
-    * holds rows — one stamped file per bucket, so the touched buckets'
-    * fragment scan reports a BucketSpec ([[GraftScan.bucketSpecOf]]).
-    * That is the condition under which the merge's join already ran
-    * `n` tasks; anything else (multi-file buckets a delta merge or a
-    * DML left, a recorded normalizer) keeps the touched-bucket scan. */
+    * comparator, bucketed reads on, at most `bucketing.maxBuckets`
+    * buckets, and — when it holds rows — one stamped file per bucket, so
+    * the touched buckets' fragment scan reports a BucketSpec
+    * ([[GraftScan.bucketSpecOf]]) and reads as bucket groups; anything
+    * else (multi-file buckets a delta merge or a DML left, a recorded
+    * normalizer) keeps the touched-bucket scan. */
   private def bucketAligned(prior: Option[Manifest], n: Int,
       keyExprRec: Option[String],
       schema: org.apache.spark.sql.types.StructType): Boolean =
     keyExprRec.contains("") &&
+      org.apache.spark.sql.internal.SQLConf.get.bucketingEnabled &&
       n <= org.apache.spark.sql.internal.SQLConf.get.bucketingMaxBuckets &&
       prior.forall { m =>
         m.rangeBounds.isEmpty && m.splits.isEmpty && m.keyExpr.isEmpty &&
@@ -1622,9 +1624,9 @@ object ManifestTable {
       val norm = mapping.keyComparator(col(key))
       val ignored = ignore.fold(lit(false))(c => coalesce(c, lit(false)))
       val takesPart = !ignored && norm.isNotNull
-      // 1. the source, and the touched buckets. A plain hash layout whose
-      //    target scan reports a BucketSpec ([[bucketAligned]]) exchanges
-      //    the taking-part rows ONCE on hashpartitioning(norm, n) — the
+      // 1. the touched buckets. A plain hash layout whose target scan
+      //    reports a BucketSpec ([[bucketAligned]]) exchanges the
+      //    taking-part rows ONCE on hashpartitioning(norm, n) — the
       //    partition formula is bucketExpr's, so partition p holds
       //    exactly bucket p — and reads the touched set off that job's
       //    map-output sizes. The rows the filter drops are counted in the
@@ -1635,7 +1637,7 @@ object ManifestTable {
         if (!bucketAligned(prior, n, keyExprRec, schema)) None
         else graft.helpers.JobLabel.withDesc(spark,
             s"graft.merge $root v$version: source exchange") {
-          org.apache.spark.sql.graft.Bridge.exchangeOnce(
+          B.exchangeOnce(
             (if (!recordStats) projected
              else projected.observe(DroppedRows,
                coalesce(sum(when(ignored, 1L)), lit(0L)).as("ignored"),
@@ -1644,16 +1646,14 @@ object ManifestTable {
               .filter(takesPart),
             Seq(norm), n)
         }
-      val (source, touched) = exchanged match {
-        case Some(ex) =>
-          (ex.frame, ex.bytes.indices.filter(ex.bytes(_) > 0).toSet)
-        case None =>
-          (projected, graft.helpers.JobLabel.withDesc(spark,
-              s"graft.merge $root v$version: touched-bucket scan") {
-            projected.filter(takesPart)
-              .select(bucketOf(col(key)).as(BucketCol))
-              .distinct().collect().map(_.getInt(0)).toSet
-          })
+      val touched = exchanged match {
+        case Some(ex) => ex.bytes.indices.filter(ex.bytes(_) > 0).toSet
+        case None => graft.helpers.JobLabel.withDesc(spark,
+            s"graft.merge $root v$version: touched-bucket scan") {
+          projected.filter(takesPart)
+            .select(bucketOf(col(key)).as(BucketCol))
+            .distinct().collect().map(_.getInt(0)).toSet
+        }
       }
       val (touchedEntries, untouched) =
         prior.map(_.entries).getOrElse(Nil).partition(e => touched(e.bucket))
@@ -1665,13 +1665,21 @@ object ManifestTable {
       // non-nullable column (INSERT ... VALUES literals) that older
       // files don't have at all — reading them under the tightened
       // schema makes the vectorized parquet reader refuse the file.
-      // Aligned, the fragment scan is bucketed like the exchanged
-      // source, so the dedup and the join plan no Exchange, and join
-      // partition p is bucket p.
-      val fragment = reconciledRead(spark, root,
+      val target = reconciledRead(spark, root,
         recordableSchema(prior, schema),
         prior.getOrElse(Manifest(-1L, n, Nil)), touchedEntries,
         key, mapping.keyComparator)
+      // Aligned, both sides read as g bucket groups, g | n sized by the
+      // merge's bytes: task i holds the buckets ≡ i (mod g) of the source
+      // shuffle and of the bucketed fragment scan, so the dedup and the
+      // join plan no Exchange, and each bucket stays in one task.
+      val (fragment, source) = exchanged match {
+        case Some(ex) =>
+          val g = B.bucketGroupCount(spark, n,
+            ex.bytes.sum + touchedEntries.map(_.bytes).sum)
+          (B.bucketGroups(target, g), ex.frame(g))
+        case None => (target, projected)
+      }
       val res = Upsert(fragment, source, mapping, mode, nonNullable,
         rejectWhen, ignore)
       // The exchanged source holds only the rows that take part; the two
@@ -1695,12 +1703,12 @@ object ManifestTable {
         try {
           // 4-5. write ONLY the touched buckets under this attempt's
           //    directory (one file per bucket, its stats observed inside
-          //    the write job — [[writeBuckets]]; aligned, without an
-          //    exchange), then the atomic no-overwrite manifest swap. In
-          //    delta mode just the batch's own post-merge rows are
-          //    written — the merged rows whose key the source carries,
-          //    a filter on the one join — and the touched buckets'
-          //    existing files stay live.
+          //    the write job — [[writeBuckets]]; aligned, in the join's g
+          //    tasks, without an exchange), then the atomic no-overwrite
+          //    manifest swap. In delta mode just the batch's own
+          //    post-merge rows are written — the merged rows whose key
+          //    the source carries, a filter on the one join — and the
+          //    touched buckets' existing files stay live.
           val toWrite = if (delta) res.upserted else res.merged
           val written = writeBuckets(toWrite, bucketOf(col(key)), key,
             root, s"v$version-$attempt", math.max(touched.size, 1),

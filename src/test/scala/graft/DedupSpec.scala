@@ -44,6 +44,22 @@ class DedupSpec extends SparkSpec {
     assert(!pairs.exists(p => p._1 == 3L || p._2 == 3L)) // distinct doc
   }
 
+  test("ProfileGaps' job table attributes every job of a minhashLsh " +
+      "collect, the AQE-submitted ones through their SQL execution") {
+    val table = new ProfileGaps.JobTable
+    org.apache.spark.sql.graft.Bridge.waitListenerBus(spark)
+    spark.sparkContext.addSparkListener(table)
+    try {
+      Dedup.minhashLsh(docs, bands = 8, rowsPerBand = 2).collect()
+      org.apache.spark.sql.graft.Bridge.waitListenerBus(spark)
+    } finally spark.sparkContext.removeSparkListener(table)
+    val recs = table.jobs.values.toArray(Array.empty[ProfileGaps.JobRec])
+    assert(recs.length > 1, "minhashLsh runs several jobs")
+    assert(recs.forall(_.via != "site"),
+      recs.map(r => s"${r.via}: ${r.desc}").mkString("unattributed: ", " | ", ""))
+    assert(recs.exists(r => r.via == "sql" && r.desc.contains("collect at")))
+  }
+
   test("minhash LSH plan has no cartesian product") {
     val plan = Dedup.minhashLsh(docs).queryExecution.executedPlan.toString
     assert(!plan.contains("Cartesian"), s"plan had cartesian:\n$plan")

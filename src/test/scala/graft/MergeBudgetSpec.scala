@@ -3,7 +3,7 @@ package graft
 import java.nio.file.{Files, Paths}
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart,
-  SparkListenerTaskEnd}
+  SparkListenerStageCompleted, SparkListenerTaskEnd}
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
@@ -16,11 +16,12 @@ import graft.mapping.Mapping
 import graft.sources.Sources
 import graft.store.ManifestTable
 
-/** Job and exchange budget of `ManifestTable.merge`: a merge into a plain
-  * hash layout parses its source once, shuffles it once and runs in two
-  * Spark jobs (the source exchange's map stage, then the write); range
-  * and split layouts keep the touched-bucket scan, and every path writes
-  * the same table. */
+/** Job, exchange and task budget of `ManifestTable.merge`: a merge into a
+  * plain hash layout parses its source once, shuffles it once and runs in
+  * two Spark jobs (the source exchange's map stage, then the write), its
+  * write sized by bytes — a small merge runs as many write tasks as the
+  * session's parallelism, several buckets each; range and split layouts
+  * keep the touched-bucket scan, and every path writes the same table. */
 class MergeBudgetSpec extends SparkSpec with AdaptiveSparkPlanHelper {
   import MergeBudgetSpec.Run
 
@@ -71,14 +72,23 @@ class MergeBudgetSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     var jobs = 0
     val descs = scala.collection.mutable.ArrayBuffer.empty[String]
     var records = 0L
+    var writeTasks = 0
+    val writeStages = scala.collection.mutable.Set.empty[Int]
     val plans = scala.collection.mutable.ArrayBuffer.empty[QueryExecution]
     val l = new SparkListener {
       override def onJobStart(js: SparkListenerJobStart): Unit = synchronized {
         jobs += 1
-        descs += Option(js.properties)
+        val desc = Option(js.properties)
           .flatMap(p => Option(p.getProperty("spark.job.description")))
           .getOrElse("")
+        descs += desc
+        if (desc.startsWith("graft.write")) writeStages ++= js.stageIds
       }
+      override def onStageCompleted(sc: SparkListenerStageCompleted): Unit =
+        synchronized {
+          if (writeStages(sc.stageInfo.stageId))
+            writeTasks += sc.stageInfo.numTasks
+        }
       override def onTaskEnd(te: SparkListenerTaskEnd): Unit = synchronized {
         if (te.taskMetrics != null)
           records += te.taskMetrics.inputMetrics.recordsRead
@@ -98,7 +108,7 @@ class MergeBudgetSpec extends SparkSpec with AdaptiveSparkPlanHelper {
       spark.sparkContext.removeSparkListener(l)
       spark.listenerManager.unregister(ql)
     }
-    Run(jobs, descs.toSeq, records, plans.toSeq)
+    Run(jobs, descs.toSeq, records, plans.toSeq, writeTasks)
   }
 
   private def exchangesOf(qe: QueryExecution): Seq[Exchange] =
@@ -134,17 +144,24 @@ class MergeBudgetSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     ManifestTable.create(target, "id", root, numBuckets = 16)
     val (csv, csvRows) = csvDir("hash")
     val before = ManifestTable.countRows(spark, root)
+    val conf = spark.conf.getAll
     val run = observed(merge(root, csv))
+    assert(spark.conf.getAll == conf, "merge changed the session conf")
     assert(pathOf(run) == "aligned")
     assert(run.jobs <= 2, s"${run.jobs} jobs: ${run.descs}")
+    // a small merge writes in parallelism-many tasks, several buckets each
+    assert(run.writeTasks == spark.sparkContext.defaultParallelism,
+      s"${run.writeTasks} write tasks")
     // every bucket is touched, so the fragment is the whole target
     assert(run.recordsRead == csvRows + before,
       s"read ${run.recordsRead} records for $csvRows CSV + $before target")
     assert(run.plans.nonEmpty)
     run.plans.foreach(p =>
       assert(exchangesOf(p).isEmpty, s"exchange in\n${p.executedPlan}"))
-    assert(entriesOf(root).groupBy(_.bucket).values.forall(_.size == 1),
-      "one file per bucket")
+    val es = entriesOf(root)
+    assert(es.map(_.bucket).sorted == (0 until 16), "one file per bucket")
+    assert(es.flatMap(e => ManifestTable.partIdOf(e.relPath.split('/').last))
+      .distinct.size == run.writeTasks)
     assert(ManifestTable.countRows(spark, root) == 800)
   }
 
@@ -243,9 +260,9 @@ class MergeBudgetSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     val run = observed(merge(root, csv, delta = true))
     assert(pathOf(run) == "aligned")
     // keeping only the source's keys turns the full-outer join into a
-    // right-outer one, so Catalyst may broadcast a small fragment (one
-    // more job); the source side is still the one exchange
-    assert(run.jobs <= 3, s"${run.jobs} jobs: ${run.descs}")
+    // right-outer one; the fragment's size stays hidden from the planner,
+    // so it is still the shuffle-free sort-merge join, not a broadcast
+    assert(run.jobs <= 2, s"${run.jobs} jobs: ${run.descs}")
     run.plans.foreach(p => assert(collect(p.executedPlan) {
       case e: org.apache.spark.sql.execution.exchange.ShuffleExchangeLike =>
         e }.isEmpty, s"shuffle in\n${p.executedPlan}"))
@@ -258,6 +275,45 @@ class MergeBudgetSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     assert(pathOf(observed(merge(root, csv, token = 2L, delta = true))) ==
       "kept")
     assert(rows(root) == rows(fullRoot))
+  }
+
+  test("a merge runs one write task per bucket when coalescing is off, " +
+      "when its input passes the advisory size, and on a prime bucket " +
+      "count; every table reads back the same") {
+    val (csv, _) = csvDir("ungrouped")
+    val grouped = freshRoot("ungrouped_ref")
+    ManifestTable.create(target, "id", grouped, numBuckets = 16)
+    merge(grouped, csv)
+    def withConf(k: String, v: String)(body: => Run): Run = {
+      val prior = spark.conf.getOption(k)
+      spark.conf.set(k, v)
+      try body
+      finally prior.fold(spark.conf.unset(k))(spark.conf.set(k, _))
+    }
+    def perBucket(name: String, buckets: Int)(run: String => Run): String = {
+      val root = freshRoot(name)
+      ManifestTable.create(target, "id", root, numBuckets = buckets)
+      val r = run(root)
+      assert(pathOf(r) == "aligned", name)
+      assert(r.jobs <= 2, s"$name: ${r.jobs} jobs: ${r.descs}")
+      assert(r.writeTasks == buckets, s"$name: ${r.writeTasks} write tasks")
+      r.plans.foreach(p =>
+        assert(exchangesOf(p).isEmpty,
+          s"$name: exchange in\n${p.executedPlan}"))
+      assert(entriesOf(root).map(_.bucket).sorted == (0 until buckets), name)
+      root
+    }
+    val roots = Seq(
+      perBucket("no_coalesce", 16)(root =>
+        withConf("spark.sql.adaptive.coalescePartitions.enabled", "false")(
+          observed(merge(root, csv)))),
+      perBucket("small_advisory", 16)(root =>
+        withConf("spark.sql.adaptive.advisoryPartitionSizeInBytes", "64")(
+          observed(merge(root, csv)))),
+      perBucket("prime", 13)(root => observed(merge(root, csv))))
+    val expected = rows(grouped)
+    assert(expected.size == 800)
+    roots.foreach(r => assert(rows(r) == expected, r))
   }
 
   test("merge stats count ignored and null-keyed rows; only their " +
@@ -327,8 +383,8 @@ class MergeBudgetSpec extends SparkSpec with AdaptiveSparkPlanHelper {
 
 object MergeBudgetSpec {
 
-  /** Jobs, their descriptions, CSV/parquet records read and the plans of
-    * every query a merge runs. */
+  /** Jobs, their descriptions, CSV/parquet records read, the plans of
+    * every query a merge runs and the tasks of its write stages. */
   final case class Run(jobs: Int, descs: Seq[String], recordsRead: Long,
-      plans: Seq[QueryExecution])
+      plans: Seq[QueryExecution], writeTasks: Int)
 }

@@ -111,6 +111,40 @@ class WriteStatsFusionSpec extends SparkSpec {
     }
   }
 
+  test("a merge writing several buckets per task takes the observed " +
+      "path, and its entries equal a readback recompute") {
+    val root = freshRoot("wsf_grouped")
+    val schema = StructType(Seq(
+      StructField("id", LongType), StructField("v", StringType)))
+    ManifestTable.create(spark.range(0, 800).select(col("id"),
+      col("id").cast("string").as("v")), "id", root, numBuckets = 16)
+    val m = new Mapping("id")
+    schema.fieldNames.foreach(f => m.field(f, parser = c => c))
+    m.complete(schema)
+    assertFusedWrite("merge", jobsOf(ManifestTable.merge(
+      m.project(spark.range(700, 900).select(col("id"),
+        concat(lit("m"), col("id").cast("string")).as("v"))),
+      1L, m, root, schema)))
+    val written = ManifestTable.currentManifest(spark, root).get.entries
+      .filter(_.seq == 1L)
+    assert(written.map(_.bucket).sorted == (0 until 16))
+    val tasks = written.flatMap(e =>
+      ManifestTable.partIdOf(e.relPath.split('/').last)).distinct
+    assert(tasks.nonEmpty && tasks.size < written.size,
+      s"${written.size} files from ${tasks.size} write tasks")
+    written.foreach { e =>
+      val r = spark.read.schema(schema).parquet(s"$root/${e.relPath}")
+        .agg(count(lit(1)), min(col("id").cast("string")),
+          max(col("id").cast("string")), min(col("id")).cast("string"),
+          max(col("id")).cast("string")).head()
+      assert(e.rows == r.getLong(0), s"rows for ${e.relPath}")
+      assert(e.minKey == r.getString(1), s"minKey for ${e.relPath}")
+      assert(e.maxKey == r.getString(2), s"maxKey for ${e.relPath}")
+      assert(e.minZ == r.getString(3), s"minZ for ${e.relPath}")
+      assert(e.maxZ == r.getString(4), s"maxZ for ${e.relPath}")
+    }
+  }
+
   test("cluster-written per-file stats are observed in-job and equal " +
       "a readback recompute") {
     val root = freshRoot("wsf_cluster")
