@@ -215,8 +215,12 @@ object ManifestTable {
       udfKey: Boolean = false,
       clusterCol: String = "",
       colMap: Seq[(String, String)] = Nil,
-      format: Int = 10,
+      format: Int = WriteFormat,
       splits: Seq[(Int, Int)] = Nil)
+
+  /** The manifest format every commit writes: [[tryCommitManifest]]'s
+    * header and the committed [[Manifest]]'s `format`. */
+  private[graft] final val WriteFormat = 13
 
   /** SHALLOW-CLONE entries ([[cloneAt]]) carry an `ext:`-prefixed
     * relPath: the rest of the string is the source file's ABSOLUTE
@@ -302,12 +306,9 @@ object ManifestTable {
       try new String(in.readAllBytes(), StandardCharsets.UTF_8)
       finally in.close()
     val lines = text.split("\n").toSeq.filter(_.nonEmpty)
-    // Formats 1 (numBuckets only), 2 (tokens, version-named side dirs),
-    // 3 (single lastBatch token), 4 (per-stream batch tokens) and 5
-    // (recorded keyExpr + lastCompact) stay READABLE so tables committed
-    // by earlier code aren't bricked by the upgrade; writes always
-    // produce format 6 (appends the range-layout boundary list — empty
-    // for hash-bucketed tables).
+    // Every format from 1 (numBuckets only) on stays READABLE so tables
+    // committed by earlier code aren't bricked by the upgrade; writes
+    // always produce WriteFormat.
     val format = lines.head match {
       case "graft-manifest 13" => 13
       case "graft-manifest 12" => 12
@@ -1021,12 +1022,14 @@ object ManifestTable {
 
   /** No-overwrite commit of manifest `m` via temp-write + rename: returns
     * false when another writer already committed this version — the OCC
-    * conflict signal; the caller cleans up its attempt and retries
+    * conflict signal; [[commitLoop]] cleans up the attempt and retries
     * against the new current state. The temp file is attempt-named so
-    * racing writers never collide pre-commit either. */
-  private def tryCommitManifest(
+    * racing writers never collide pre-commit either. Only
+    * [[commitLoop]] and the bootstrap commits ([[create]], [[cloneAt]])
+    * call it. */
+  private[graft] def tryCommitManifest(
       spark: SparkSession, root: String, m: Manifest): Boolean = {
-    val body = (s"graft-manifest 13" +:
+    val body = (s"graft-manifest $WriteFormat" +:
       Seq(
         m.numBuckets.toString,
         m.lastBatches.toSeq.sortBy(_._1)
@@ -1082,6 +1085,76 @@ object ManifestTable {
       val fs = fsOf(spark, p)
       if (fs.exists(p)) fs.delete(p, true)
     }
+
+  /** One [[commitLoop]] attempt: the manifest it builds on (None while
+    * no table exists), the version it publishes, and its id, which names
+    * the attempt's data/history/stats directories (`v<version>-<id>`). */
+  private final case class Attempt(
+      prior: Option[Manifest], version: Long, id: String) {
+    def dir: String = s"v$version-$id"
+    def table(root: String): Manifest = prior.getOrElse(
+      throw new IllegalStateException(s"no table at $root"))
+  }
+
+  /** An operation's idempotency token and the slot it is recorded in: a
+    * caller-named stream's `lastBatches` entry, else `lastCompact` for
+    * [[compact]] and `lastDelete` for the other maintenance operations. */
+  private final case class Token(value: Long, stream: Option[String],
+      compact: Boolean = false) {
+    def replayed(m: Manifest): Boolean = stream match {
+      case Some(s) => m.lastBatches.get(s).contains(value)
+      case None if compact => m.lastCompact.contains(value)
+      case None => m.lastDelete.contains(value)
+    }
+    def stamp(m: Manifest): Manifest = stream match {
+      case Some(s) => m.copy(lastBatches = m.lastBatches + (s -> value))
+      case None if compact => m.copy(lastCompact = Some(value))
+      case None => m.copy(lastDelete = Some(value))
+    }
+  }
+
+  /** The optimistic-concurrency commit every manifest writer runs (the
+    * shape of Delta Lake's OptimisticTransaction). Each attempt:
+    *  1. replay check: when the current manifest already records
+    *     `token`, the call is a re-delivery — return `replayed`, commit
+    *     nothing;
+    *  2. build: `body` returns `Left(result)` to finish without a commit
+    *     (a no-op), or `Right((next, result))`, where `next` is the
+    *     table's new state, as `prior.copy(...)` naming only the fields
+    *     the operation changes;
+    *  3. publish: `next`, stamped with the attempt's version and id, the
+    *     write format and `token`, goes through [[tryCommitManifest]];
+    *  4. on a lost race, delete what the attempt wrote under its own
+    *     directories ([[cleanupAttempt]]), never committed files;
+    *  5. retry from 1 against the new current state.
+    * Each attempt's Spark jobs carry the description
+    * `graft.<op> <root> v<N>`; a label set inside `body` overrides it for
+    * its own jobs. */
+  private def commitLoop[A](spark: SparkSession, root: String, op: String,
+      token: Option[Token], replayed: => A)(
+      body: Attempt => Either[A, (Manifest, A)]): A = {
+    while (true) {
+      val prior = currentManifest(spark, root)
+      if (prior.exists(m => token.exists(_.replayed(m)))) return replayed
+      val a = Attempt(prior, prior.fold(0L)(_.version + 1), newAttemptId())
+      val done = graft.helpers.JobLabel.withDesc(spark,
+          s"graft.$op $root v${a.version}") {
+        body(a) match {
+          case Left(result) => Some(result)
+          case Right((next, result)) =>
+            val m = token.fold(next)(_.stamp(next))
+              .copy(version = a.version, sideId = a.id, format = WriteFormat)
+            if (tryCommitManifest(spark, root, m)) Some(result)
+            else { cleanupAttempt(spark, root, a.version, a.id); None }
+        }
+      }
+      done match {
+        case Some(result) => return result
+        case None => ()
+      }
+    }
+    throw new IllegalStateException("unreachable")
+  }
 
   /** Writes `df`'s rows bucketed under `data/<dataDirName>` and returns
     * one FileEntry per written file, its stats observed inside the write
@@ -1467,42 +1540,25 @@ object ManifestTable {
       keyComparator: org.apache.spark.sql.Column => org.apache.spark.sql.Column =
         identity): Unit = {
     val spark = df.sparkSession
-    while (true) {
-      currentManifest(spark, root) match {
-        case None =>
-          try {
-            create(df, keyColumn, root, numBuckets, keyComparator)
-            return
-          } catch {
-            case _: java.util.ConcurrentModificationException => () // retry
-          }
-        case Some(prior) =>
-          require(prior.keyColumn.isEmpty || prior.keyColumn == keyColumn,
-            s"table at $root keys on '${prior.keyColumn}', not '$keyColumn'")
-          val attempt = newAttemptId()
-          val version = prior.version + 1
-          val n = prior.numBuckets
-          val cmp = effectiveKey(prior, keyComparator)
-          val bucket = leafExpr(prior, cmp(col(keyColumn)))
-          checkPhysicalCollision(prior, df.schema, "replace")
-          // an overwrite may narrow the schema; keep only the mappings
-          // its fields still need
-          val cmap = prior.colMap.filter { case (l, _) =>
-            df.schema.fieldNames.contains(l) }
-          val written = writeBuckets(df, bucket, keyColumn, root,
-            s"v$version-$attempt", n, cmp, seq = version, colMap = cmap)
-          val keyExprRec = comparatorSql(df, keyColumn, cmp)
-          if (tryCommitManifest(spark, root, Manifest(version, n, written,
-              prior.lastBatches, prior.lastDelete, attempt, keyColumn,
-              keyExprRec.getOrElse(prior.keyExpr), prior.lastCompact,
-              prior.rangeBounds,
-              recordableSchema(Some(prior), df.schema).json,
-              keyExprRec.isEmpty || prior.udfKey,
-              clusterCol = prior.clusterCol, colMap = cmap,
-              splits = prior.splits)))
-            return
-          cleanupAttempt(spark, root, version, attempt)
-      }
+    commitLoop(spark, root, "replace", None, ()) { a =>
+      // no table yet: the first replace commits version 0
+      val prior = a.prior.getOrElse(Manifest(-1L, numBuckets, Nil))
+      require(prior.keyColumn.isEmpty || prior.keyColumn == keyColumn,
+        s"table at $root keys on '${prior.keyColumn}', not '$keyColumn'")
+      val cmp = effectiveKey(prior, keyComparator)
+      val bucket = leafExpr(prior, cmp(col(keyColumn)))
+      checkPhysicalCollision(prior, df.schema, "replace")
+      // an overwrite may narrow the schema; keep only the mappings
+      // its fields still need
+      val cmap = prior.colMap.filter { case (l, _) =>
+        df.schema.fieldNames.contains(l) }
+      val written = writeBuckets(df, bucket, keyColumn, root, a.dir,
+        prior.numBuckets, cmp, seq = a.version, colMap = cmap)
+      val keyExprRec = comparatorSql(df, keyColumn, cmp)
+      Right((prior.copy(entries = written, keyColumn = keyColumn,
+        keyExpr = keyExprRec.getOrElse(prior.keyExpr),
+        schemaJson = recordableSchema(a.prior, df.schema).json,
+        udfKey = keyExprRec.isEmpty || prior.udfKey, colMap = cmap), ()))
     }
   }
 
@@ -1585,10 +1641,11 @@ object ManifestTable {
       "merge(delta = true) needs a key comparator expressible as SQL " +
         "(built-in expressions only — a UDF comparator cannot be recorded " +
         "in the manifest for readers to reconcile delta files with)")
-    while (true) {
-      val prior = currentManifest(spark, root)
-      if (prior.exists(_.lastBatches.get(streamId).contains(batchId)))
-        return Nil
+    commitLoop(spark, root, "merge", Some(Token(batchId, Some(streamId))),
+        Seq.empty[FileEntry]) { a =>
+      val prior = a.prior
+      // no table yet: the first merge commits version 0
+      val base = prior.getOrElse(Manifest(-1L, numBuckets, Nil))
       // Schema evolution is ADD-ONLY against the recorded schema: a
       // merge may introduce new columns (opt-in — old rows read them as
       // NULL), but never drop or re-type recorded ones: the fragment
@@ -1596,17 +1653,15 @@ object ManifestTable {
       // corrupt values on the rewrite.
       prior.foreach(m =>
         checkSchemaCompatible(m, schema, "merge", allowAdd = evolveSchema))
-      val attempt = newAttemptId()
-      val version = prior.map(_.version + 1).getOrElse(0L)
+      val version = a.version
       // numBuckets is a TABLE property: fixed at creation, the parameter is
       // ignored once a manifest exists (a mismatch would scatter each key
-      // across two bucket layouts).
-      val n = prior.map(_.numBuckets).getOrElse(numBuckets)
+      // across two bucket layouts). Like numBuckets, the range layout and
+      // the split tree are table properties a merge carries through.
+      val n = base.numBuckets
       val key = mapping.keyColumnName
-      // Like numBuckets, the range layout is a table property fixed at
-      // creation — a merge carries it through.
-      val bounds = prior.map(_.rangeBounds).getOrElse(Nil)
-      val splits = prior.map(_.splits).getOrElse(Nil)
+      val bounds = base.rangeBounds
+      val splits = base.splits
       val bucketOf: org.apache.spark.sql.Column => org.apache.spark.sql.Column =
         c => leafExpr(n, bounds, splits, mapping.keyComparator(c))
       // should_import rows (flagged by the pipeline) still flow through the
@@ -1656,7 +1711,7 @@ object ManifestTable {
         }
       }
       val (touchedEntries, untouched) =
-        prior.map(_.entries).getOrElse(Nil).partition(e => touched(e.bucket))
+        base.entries.partition(e => touched(e.bucket))
 
       // 2-3. target fragment = touched buckets only (reconciled, in case
       // earlier delta merges left multi-file buckets); standard one-join
@@ -1666,8 +1721,7 @@ object ManifestTable {
       // files don't have at all — reading them under the tightened
       // schema makes the vectorized parquet reader refuse the file.
       val target = reconciledRead(spark, root,
-        recordableSchema(prior, schema),
-        prior.getOrElse(Manifest(-1L, n, Nil)), touchedEntries,
+        recordableSchema(prior, schema), base, touchedEntries,
         key, mapping.keyComparator)
       // Aligned, both sides read as g bucket groups, g | n sized by the
       // merge's bytes: task i holds the buckets ≡ i (mod g) of the source
@@ -1699,71 +1753,46 @@ object ManifestTable {
       // fragment and re-aggregating the source per output (UpsertResult's
       // own contract).
       if (multiOut) res.joined.persist()
-      val committed =
-        try {
-          // 4-5. write ONLY the touched buckets under this attempt's
-          //    directory (one file per bucket, its stats observed inside
-          //    the write job — [[writeBuckets]]; aligned, in the join's g
-          //    tasks, without an exchange), then the atomic no-overwrite
-          //    manifest swap. In delta mode just the batch's own
-          //    post-merge rows are written — the merged rows whose key
-          //    the source carries, a filter on the one join — and the
-          //    touched buckets' existing files stay live.
-          val toWrite = if (delta) res.upserted else res.merged
-          val written = writeBuckets(toWrite, bucketOf(col(key)), key,
-            root, s"v$version-$attempt", math.max(touched.size, 1),
-            mapping.keyComparator, seq = version,
-            colMap = prior.map(_.colMap).getOrElse(Nil),
-            aligned = exchanged.isDefined)
+      try {
+        // 4-5. write ONLY the touched buckets under this attempt's
+        //    directory (one file per bucket, its stats observed inside
+        //    the write job — [[writeBuckets]]; aligned, in the join's g
+        //    tasks, without an exchange), then the atomic no-overwrite
+        //    manifest swap. In delta mode just the batch's own
+        //    post-merge rows are written — the merged rows whose key
+        //    the source carries, a filter on the one join — and the
+        //    touched buckets' existing files stay live.
+        val toWrite = if (delta) res.upserted else res.merged
+        val written = writeBuckets(toWrite, bucketOf(col(key)), key,
+          root, a.dir, math.max(touched.size, 1),
+          mapping.keyComparator, seq = version, colMap = base.colMap,
+          aligned = exchanged.isDefined)
 
-          // keep_history rows and import stats are part of the same commit:
-          // written under attempt-scoped directories BEFORE the manifest
-          // rename, so the rename makes state + history + stats visible
-          // together (the reference commits history in the same DB
-          // transaction, importtask.py:313-344,:369-371). A replay skips the
-          // whole merge, so history is never duplicated; the manifest
-          // records this attempt's id, so a crashed or losing attempt's
-          // side dirs can never become visible through someone else's
-          // commit (see committedSideDirs).
-          if (writesHistory)
-            res.history.write.mode("overwrite")
-              .parquet(s"$root/history/v$version-$attempt")
-          if (recordStats)
-            stats.write.mode("overwrite")
-              .parquet(s"$root/stats/v$version-$attempt")
+        // keep_history rows and import stats are part of the same commit:
+        // written under attempt-scoped directories BEFORE the manifest
+        // rename, so the rename makes state + history + stats visible
+        // together (the reference commits history in the same DB
+        // transaction, importtask.py:313-344,:369-371). A replay skips the
+        // whole merge, so history is never duplicated; the manifest
+        // records this attempt's id, so a crashed or losing attempt's
+        // side dirs can never become visible through someone else's
+        // commit (see committedSideDirs).
+        if (writesHistory)
+          res.history.write.mode("overwrite")
+            .parquet(s"$root/history/${a.dir}")
+        if (recordStats)
+          stats.write.mode("overwrite").parquet(s"$root/stats/${a.dir}")
 
-          val live = untouched ++
-            (if (delta) touchedEntries else Nil) ++ written
-          if (tryCommitManifest(spark, root,
-              Manifest(version, n, live,
-                prior.map(_.lastBatches).getOrElse(Map.empty) +
-                  (streamId -> batchId),
-                prior.flatMap(_.lastDelete),
-                attempt, key,
-                keyExprRec.getOrElse(
-                  prior.map(_.keyExpr).getOrElse("")),
-                prior.flatMap(_.lastCompact),
-                bounds,
-                recordableSchema(prior, schema).json,
-                udfKey = keyExprRec.isEmpty ||
-                  prior.exists(_.udfKey),
-                clusterCol = prior.map(_.clusterCol).getOrElse(""),
-                colMap = prior.map(_.colMap).getOrElse(Nil),
-                splits = prior.map(_.splits).getOrElse(Nil))))
-            Some(written)
-          else {
-            cleanupAttempt(spark, root, version, attempt)
-            None // lost the race — recompute against the new state
-          }
-        } finally {
-          if (multiOut) res.joined.unpersist()
-        }
-      committed match {
-        case Some(written) => return written
-        case None => ()
+        val live = untouched ++
+          (if (delta) touchedEntries else Nil) ++ written
+        Right((base.copy(entries = live, keyColumn = key,
+          keyExpr = keyExprRec.getOrElse(base.keyExpr),
+          schemaJson = recordableSchema(prior, schema).json,
+          udfKey = keyExprRec.isEmpty || base.udfKey), written))
+      } finally {
+        if (multiOut) res.joined.unpersist()
       }
     }
-    Nil // unreachable
   }
 
   /** Committed side-directories for `kind` (history/stats), oldest
@@ -2830,115 +2859,84 @@ object ManifestTable {
       keyComparator: org.apache.spark.sql.Column => org.apache.spark.sql.Column =
         identity,
       tokenStream: Option[String] = None,
-      delta: Boolean = false): Seq[FileEntry] = {
-    while (true) {
-      val prior = currentManifest(spark, root).getOrElse(return Nil)
-      val replayed = tokenStream match {
-        case Some(s) => prior.lastBatches.get(s).contains(token)
-        case None => prior.lastDelete.contains(token)
-      }
-      if (replayed) return Nil
-      // Rewrite guard: a stale (pre-evolution) caller schema would erase
-      // the newer columns' values in every rewritten bucket.
-      checkSchemaCompatible(prior, schema, "delete", allowAdd = true)
-      if (delta) require(!prior.udfKey,
-        "delete(delta = true) needs a recordable key comparator — a " +
-          "udfKey layout's readers cannot reconcile tombstones in " +
-          "normalized key space")
-      val batches = tokenStream.fold(prior.lastBatches)(s =>
-        prior.lastBatches + (s -> token))
-      val deleteToken =
-        if (tokenStream.isEmpty) Some(token) else prior.lastDelete
-      val attempt = newAttemptId()
-      val version = prior.version + 1
-      val n = prior.numBuckets
-      // Bucket targeting AND the keep-filter run under the table's
-      // EFFECTIVE comparator ([[effectiveKey]]): on a keyExpr-recorded
-      // table the identity-default caller would otherwise probe the
-      // wrong buckets and filter by raw key — committing its token
-      // while erasing nothing, so a corrected retry replays into a
-      // silent no-op.
-      val cmp = effectiveKey(prior, keyComparator)
-      val probes = normalizedProbes(spark, prior, keyColumn, keys,
-        keyComparator)
-      val rendered = probes.map(_._1).toSet
-      val (touchedEntries, untouched) =
-        prior.entries.partition(e => rendered(e.bucket))
-      if (touchedEntries.isEmpty) {
-        if (tryCommitManifest(spark, root, Manifest(version, n,
-            prior.entries, batches, deleteToken, attempt,
-            prior.keyColumn, prior.keyExpr, prior.lastCompact,
-            prior.rangeBounds, prior.schemaJson, prior.udfKey,
-            clusterCol = prior.clusterCol, colMap = prior.colMap,
-            splits = prior.splits)))
-          return Nil
-      } else if (delta) {
-        // TOMBSTONE mode: one key-only file per touched bucket, raw
-        // keys at the table's key type (the reconcile applies the same
-        // recorded normalizer to them as to data rows). Buckets no
-        // probe key targets — and keys whose bucket holds no live
-        // entries — write nothing: there is nothing their tombstone
-        // could kill. Null keys are inert in the reconcile's anti-join
-        // and are dropped here so hash(null) can't bucket them.
-        val keyField = schema(schema.fieldIndex(keyColumn))
-        val bucket = leafExpr(prior, cmp(col(keyColumn)))
-        val targets = touchedEntries.map(_.bucket).distinct
-        val tombDf = probeFrame(spark, keyColumn, keys)
-          .select(col(keyColumn).cast(keyField.dataType).as(keyColumn))
-          .filter(col(keyColumn).isNotNull && cmp(col(keyColumn)).isNotNull)
-          .distinct()
-          .filter(bucket.isin(targets.map(Integer.valueOf): _*))
-        val written = writeBuckets(tombDf, bucket, keyColumn, root,
-          s"v$version-$attempt", targets.size, cmp, seq = version,
-          colMap = prior.colMap).map(_.copy(tomb = true))
-        if (tryCommitManifest(spark, root, Manifest(version, n,
-            prior.entries ++ written, batches, deleteToken, attempt,
-            keyColumn, prior.keyExpr, prior.lastCompact,
-            prior.rangeBounds, prior.schemaJson, prior.udfKey,
-            clusterCol = prior.clusterCol, colMap = prior.colMap,
-            splits = prior.splits)))
-          return written
-        cleanupAttempt(spark, root, version, attempt)
-      } else {
-        // Keep-filter must be NULL-safe: `key isin (...)` is NULL for a
-        // NULL key, and a bare `!NULL` filter would silently DROP
-        // null-keyed rows that happen to share a bucket with a deleted key.
-        // The fragment read reconciles delta files first, so a rewritten
-        // bucket comes out compacted as a side effect. The isin list
-        // holds the PRE-normalized probe values (normalizing a literal
-        // through the recorded keyExpr directly is impossible — it
-        // resolves by column name). Big probe sets switch to a
-        // broadcast ANTI-join (NULL keys never match the condition and
-        // are kept — same semantics, no O(N) analyzer cost).
-        val reconciled = reconciledRead(spark, root, schema, prior,
-          touchedEntries, keyColumn, cmp)
-        val fragment =
-          if (probes.size <= InlineProbeLimit)
-            reconciled.filter(!coalesce(
-              cmp(col(keyColumn)).isin(probes.map(p => lit(p._2)): _*),
-              lit(false)))
-          else {
-            val pf = broadcast(probeFrame(spark, "_probe_k",
-              probes.map(_._2)))
-            reconciled.join(pf,
-              cmp(col(keyColumn)) === pf("_probe_k"), "left_anti")
-          }
-        val bucket = leafExpr(prior, cmp(col(keyColumn)))
-        val written = writeBuckets(fragment, bucket, keyColumn, root,
-          s"v$version-$attempt", touchedEntries.map(_.bucket).distinct.size,
-          cmp, seq = version, colMap = prior.colMap)
-        if (tryCommitManifest(spark, root, Manifest(version, n,
-            untouched ++ written, batches, deleteToken, attempt,
-            keyColumn, prior.keyExpr, prior.lastCompact,
-            prior.rangeBounds, prior.schemaJson, prior.udfKey,
-            clusterCol = prior.clusterCol, colMap = prior.colMap,
-            splits = prior.splits)))
-          return written
-        cleanupAttempt(spark, root, version, attempt)
-      }
+      delta: Boolean = false): Seq[FileEntry] =
+    commitLoop(spark, root, "delete", Some(Token(token, tokenStream)),
+        Seq.empty[FileEntry]) {
+      case Attempt(None, _, _) => Left(Nil)
+      case a @ Attempt(Some(prior), version, _) =>
+        // Rewrite guard: a stale (pre-evolution) caller schema would erase
+        // the newer columns' values in every rewritten bucket.
+        checkSchemaCompatible(prior, schema, "delete", allowAdd = true)
+        if (delta) require(!prior.udfKey,
+          "delete(delta = true) needs a recordable key comparator — a " +
+            "udfKey layout's readers cannot reconcile tombstones in " +
+            "normalized key space")
+        // Bucket targeting AND the keep-filter run under the table's
+        // EFFECTIVE comparator ([[effectiveKey]]): on a keyExpr-recorded
+        // table the identity-default caller would otherwise probe the
+        // wrong buckets and filter by raw key — committing its token
+        // while erasing nothing, so a corrected retry replays into a
+        // silent no-op.
+        val cmp = effectiveKey(prior, keyComparator)
+        val probes = normalizedProbes(spark, prior, keyColumn, keys,
+          keyComparator)
+        val rendered = probes.map(_._1).toSet
+        val (touchedEntries, untouched) =
+          prior.entries.partition(e => rendered(e.bucket))
+        if (touchedEntries.isEmpty) Right((prior, Nil))
+        else if (delta) {
+          // TOMBSTONE mode: one key-only file per touched bucket, raw
+          // keys at the table's key type (the reconcile applies the same
+          // recorded normalizer to them as to data rows). Buckets no
+          // probe key targets — and keys whose bucket holds no live
+          // entries — write nothing: there is nothing their tombstone
+          // could kill. Null keys are inert in the reconcile's anti-join
+          // and are dropped here so hash(null) can't bucket them.
+          val keyField = schema(schema.fieldIndex(keyColumn))
+          val bucket = leafExpr(prior, cmp(col(keyColumn)))
+          val targets = touchedEntries.map(_.bucket).distinct
+          val tombDf = probeFrame(spark, keyColumn, keys)
+            .select(col(keyColumn).cast(keyField.dataType).as(keyColumn))
+            .filter(col(keyColumn).isNotNull && cmp(col(keyColumn)).isNotNull)
+            .distinct()
+            .filter(bucket.isin(targets.map(Integer.valueOf): _*))
+          val written = writeBuckets(tombDf, bucket, keyColumn, root, a.dir,
+            targets.size, cmp, seq = version, colMap = prior.colMap)
+            .map(_.copy(tomb = true))
+          Right((prior.copy(entries = prior.entries ++ written,
+            keyColumn = keyColumn), written))
+        } else {
+          // Keep-filter must be NULL-safe: `key isin (...)` is NULL for a
+          // NULL key, and a bare `!NULL` filter would silently DROP
+          // null-keyed rows that happen to share a bucket with a deleted key.
+          // The fragment read reconciles delta files first, so a rewritten
+          // bucket comes out compacted as a side effect. The isin list
+          // holds the PRE-normalized probe values (normalizing a literal
+          // through the recorded keyExpr directly is impossible — it
+          // resolves by column name). Big probe sets switch to a
+          // broadcast ANTI-join (NULL keys never match the condition and
+          // are kept — same semantics, no O(N) analyzer cost).
+          val reconciled = reconciledRead(spark, root, schema, prior,
+            touchedEntries, keyColumn, cmp)
+          val fragment =
+            if (probes.size <= InlineProbeLimit)
+              reconciled.filter(!coalesce(
+                cmp(col(keyColumn)).isin(probes.map(p => lit(p._2)): _*),
+                lit(false)))
+            else {
+              val pf = broadcast(probeFrame(spark, "_probe_k",
+                probes.map(_._2)))
+              reconciled.join(pf,
+                cmp(col(keyColumn)) === pf("_probe_k"), "left_anti")
+            }
+          val bucket = leafExpr(prior, cmp(col(keyColumn)))
+          val written = writeBuckets(fragment, bucket, keyColumn, root, a.dir,
+            touchedEntries.map(_.bucket).distinct.size, cmp, seq = version,
+            colMap = prior.colMap)
+          Right((prior.copy(entries = untouched ++ written,
+            keyColumn = keyColumn), written))
+        }
     }
-    Nil // unreachable
-  }
 
   /** Row-level DELETE by ARBITRARY predicate — the complement to the
     * metadata-served key [[delete]] (SQL `DELETE FROM t WHERE <key>`
@@ -3078,135 +3076,101 @@ object ManifestTable {
       label: String,
       fragmentOf: (DataFrame, String) => DataFrame,
       tombstone: Boolean = false,
-      commitOnMiss: Boolean = true): Seq[FileEntry] = {
-    while (true) {
-      val prior = currentManifest(spark, root).getOrElse(return Nil)
-      val replayed = tokenStream match {
-        case Some(s) => prior.lastBatches.get(s).contains(token)
-        case None => prior.lastDelete.contains(token)
-      }
-      if (replayed) return Nil
-      checkSchemaCompatible(prior, schema, label, allowAdd = true)
-      if (tombstone) require(!prior.udfKey,
-        s"$label(delta = true) needs a recordable key comparator — a " +
-          "udfKey layout's readers cannot reconcile tombstones in " +
-          "normalized key space")
-      val keyColumn = prior.keyColumn
-      require(keyColumn.nonEmpty, s"table at $root records no key column")
-      val batches = tokenStream.fold(prior.lastBatches)(s =>
-        prior.lastBatches + (s -> token))
-      val deleteToken =
-        if (tokenStream.isEmpty) Some(token) else prior.lastDelete
-      val attempt = newAttemptId()
-      val version = prior.version + 1
-      val n = prior.numBuckets
-      val cmp = effectiveKey(prior, keyComparator)
-      val bucket = leafExpr(prior, cmp(col(keyColumn)))
-      // discovery: the predicate's TRUE rows, reduced to their buckets —
-      // ≤ numBuckets result rows, bounded at any table size; a zone
-      // hint narrows the scanned entries to sidecar-candidate files
-      val zonePruned =
-        if (zoneRanges.isEmpty) prior.entries
-        else ZoneSkip.prunedEntries(spark, root, schema, prior,
-          zoneRanges)
-      val bloomPruned = bloomProbes
-        .filter { case (_, vs) => vs.nonEmpty }
-        .foldLeft(zonePruned) { case (es, (c, vs)) =>
-          if (es.isEmpty) es
-          else {
-            val keep = BloomSkip.prunedEntriesFor(spark, root, schema,
-              prior, c, vs)._1.map(_.relPath).toSet
-            es.filter(e => keep(e.relPath))
-          }
-        }
-      // index hint: a FRESH registered index on a probed column names
-      // the exact keys holding those values, so discovery narrows to
-      // their buckets — re-derived per OCC attempt against `prior`, so
-      // a retry never reuses answers from a superseded snapshot. A
-      // value set the index proves EMPTY empties discovery (sound: the
-      // conjunct alone excludes every row). Lagging index, null-keyed
-      // files, or a key-column probe decline to the wider set.
-      val discEntries = indexProbes
-        .filter { case (c, vs) => vs.nonEmpty && c != keyColumn }
-        .foldLeft(bloomPruned) { case (es, (c, vs)) =>
-          if (es.isEmpty) es
-          else SecondaryIndex
-            .hintBuckets(spark, root, schema, prior, c, vs) match {
-              case Some(bks) => es.filter(e => bks(e.bucket))
-              case None => es
+      commitOnMiss: Boolean = true): Seq[FileEntry] =
+    commitLoop(spark, root, label, Some(Token(token, tokenStream)),
+        Seq.empty[FileEntry]) {
+      case Attempt(None, _, _) => Left(Nil)
+      case a @ Attempt(Some(prior), version, _) =>
+        checkSchemaCompatible(prior, schema, label, allowAdd = true)
+        if (tombstone) require(!prior.udfKey,
+          s"$label(delta = true) needs a recordable key comparator — a " +
+            "udfKey layout's readers cannot reconcile tombstones in " +
+            "normalized key space")
+        val keyColumn = prior.keyColumn
+        require(keyColumn.nonEmpty, s"table at $root records no key column")
+        val cmp = effectiveKey(prior, keyComparator)
+        val bucket = leafExpr(prior, cmp(col(keyColumn)))
+        // discovery: the predicate's TRUE rows, reduced to their buckets —
+        // ≤ numBuckets result rows, bounded at any table size; a zone
+        // hint narrows the scanned entries to sidecar-candidate files
+        val zonePruned =
+          if (zoneRanges.isEmpty) prior.entries
+          else ZoneSkip.prunedEntries(spark, root, schema, prior,
+            zoneRanges)
+        val bloomPruned = bloomProbes
+          .filter { case (_, vs) => vs.nonEmpty }
+          .foldLeft(zonePruned) { case (es, (c, vs)) =>
+            if (es.isEmpty) es
+            else {
+              val keep = BloomSkip.prunedEntriesFor(spark, root, schema,
+                prior, c, vs)._1.map(_.relPath).toSet
+              es.filter(e => keep(e.relPath))
             }
+          }
+        // index hint: a FRESH registered index on a probed column names
+        // the exact keys holding those values, so discovery narrows to
+        // their buckets — re-derived per OCC attempt against `prior`, so
+        // a retry never reuses answers from a superseded snapshot. A
+        // value set the index proves EMPTY empties discovery (sound: the
+        // conjunct alone excludes every row). Lagging index, null-keyed
+        // files, or a key-column probe decline to the wider set.
+        val discEntries = indexProbes
+          .filter { case (c, vs) => vs.nonEmpty && c != keyColumn }
+          .foldLeft(bloomPruned) { case (es, (c, vs)) =>
+            if (es.isEmpty) es
+            else SecondaryIndex
+              .hintBuckets(spark, root, schema, prior, c, vs) match {
+                case Some(bks) => es.filter(e => bks(e.bucket))
+                case None => es
+              }
+          }
+        val touched: Set[Int] =
+          if (discEntries.isEmpty) Set.empty
+          else {
+            val state = reconciledRead(spark, root, schema, prior,
+              discEntries, keyColumn, cmp)
+            state.filter(coalesce(condition(state), lit(false)))
+              .select(bucket.as("_b")).distinct()
+              .collect().map(_.getInt(0)).toSet
+          }
+        val (touchedEntries, untouched) =
+          prior.entries.partition(e => touched(e.bucket))
+        if (touchedEntries.isEmpty) {
+          // nothing matched: commit the token so replays no-op, like the
+          // keyed delete's miss path — unless the caller opted out
+          // (the declared-TTL hook: a per-commit probe must not CHURN a
+          // version per miss; it has no replay problem because a lost
+          // race simply retries on the next commit)
+          if (commitOnMiss) Right((prior, Nil)) else Left(Nil)
+        } else if (tombstone) {
+          // TOMBSTONE mode: re-evaluate the predicate over the touched
+          // buckets' reconciled live state and keep only the KEY column —
+          // exact (names only rows that exist and match), slim (the write
+          // is keys, not rows), distributed (keys shuffle straight into
+          // the bucketed write — no driver funnel, millions of matches
+          // stream). Null keys are inert in the reconcile's anti-join and
+          // are dropped so hash(null) can't bucket them.
+          val reconciled = reconciledRead(spark, root, schema, prior,
+            touchedEntries, keyColumn, cmp)
+          val keysDf = reconciled
+            .filter(coalesce(condition(reconciled), lit(false)))
+            .filter(col(keyColumn).isNotNull &&
+              cmp(col(keyColumn)).isNotNull)
+            .select(col(keyColumn))
+          val written = writeBuckets(keysDf, bucket, keyColumn, root, a.dir,
+            touchedEntries.map(_.bucket).distinct.size, cmp, seq = version,
+            colMap = prior.colMap).map(_.copy(tomb = true))
+          Right((prior.copy(entries = prior.entries ++ written), written))
+        } else {
+          val reconciled = reconciledRead(spark, root, schema, prior,
+            touchedEntries, keyColumn, cmp)
+          val fragment = fragmentOf(reconciled, keyColumn)
+          val written = writeBuckets(fragment, bucket, keyColumn, root, a.dir,
+            touchedEntries.map(_.bucket).distinct.size, cmp, seq = version,
+            colMap = prior.colMap)
+          Right((prior.copy(entries = untouched ++ written), written))
         }
-      val touched: Set[Int] =
-        if (discEntries.isEmpty) Set.empty
-        else {
-          val state = reconciledRead(spark, root, schema, prior,
-            discEntries, keyColumn, cmp)
-          state.filter(coalesce(condition(state), lit(false)))
-            .select(bucket.as("_b")).distinct()
-            .collect().map(_.getInt(0)).toSet
-        }
-      val (touchedEntries, untouched) =
-        prior.entries.partition(e => touched(e.bucket))
-      if (touchedEntries.isEmpty) {
-        // nothing matched: commit the token so replays no-op, like the
-        // keyed delete's miss path — unless the caller opted out
-        // (the declared-TTL hook: a per-commit probe must not CHURN a
-        // version per miss; it has no replay problem because a lost
-        // race simply retries on the next commit)
-        if (!commitOnMiss) return Nil
-        if (tryCommitManifest(spark, root, Manifest(version, n,
-            prior.entries, batches, deleteToken, attempt,
-            prior.keyColumn, prior.keyExpr, prior.lastCompact,
-            prior.rangeBounds, prior.schemaJson, prior.udfKey,
-            clusterCol = prior.clusterCol, colMap = prior.colMap,
-            splits = prior.splits)))
-          return Nil
-      } else if (tombstone) {
-        // TOMBSTONE mode: re-evaluate the predicate over the touched
-        // buckets' reconciled live state and keep only the KEY column —
-        // exact (names only rows that exist and match), slim (the write
-        // is keys, not rows), distributed (keys shuffle straight into
-        // the bucketed write — no driver funnel, millions of matches
-        // stream). Null keys are inert in the reconcile's anti-join and
-        // are dropped so hash(null) can't bucket them.
-        val reconciled = reconciledRead(spark, root, schema, prior,
-          touchedEntries, keyColumn, cmp)
-        val keysDf = reconciled
-          .filter(coalesce(condition(reconciled), lit(false)))
-          .filter(col(keyColumn).isNotNull &&
-            cmp(col(keyColumn)).isNotNull)
-          .select(col(keyColumn))
-        val written = writeBuckets(keysDf, bucket, keyColumn, root,
-          s"v$version-$attempt", touchedEntries.map(_.bucket).distinct.size,
-          cmp, seq = version, colMap = prior.colMap)
-          .map(_.copy(tomb = true))
-        if (tryCommitManifest(spark, root, Manifest(version, n,
-            prior.entries ++ written, batches, deleteToken, attempt,
-            keyColumn, prior.keyExpr, prior.lastCompact,
-            prior.rangeBounds, prior.schemaJson, prior.udfKey,
-            clusterCol = prior.clusterCol, colMap = prior.colMap,
-            splits = prior.splits)))
-          return written
-        cleanupAttempt(spark, root, version, attempt)
-      } else {
-        val reconciled = reconciledRead(spark, root, schema, prior,
-          touchedEntries, keyColumn, cmp)
-        val fragment = fragmentOf(reconciled, keyColumn)
-        val written = writeBuckets(fragment, bucket, keyColumn, root,
-          s"v$version-$attempt", touchedEntries.map(_.bucket).distinct.size,
-          cmp, seq = version, colMap = prior.colMap)
-        if (tryCommitManifest(spark, root, Manifest(version, n,
-            untouched ++ written, batches, deleteToken, attempt,
-            keyColumn, prior.keyExpr, prior.lastCompact,
-            prior.rangeBounds, prior.schemaJson, prior.udfKey,
-            clusterCol = prior.clusterCol, colMap = prior.colMap,
-            splits = prior.splits)))
-          return written
-        cleanupAttempt(spark, root, version, attempt)
-      }
     }
-    Nil // unreachable
-  }
 
   /** SQL `MERGE INTO` executor ([[GraftDmlStrategy]] validates and
     * calls): ONE full-outer join of the source against the reconciled
@@ -3256,10 +3220,10 @@ object ManifestTable {
       DeleteAction, Filter, InsertAction, Join, JoinHint, Project,
       UpdateAction}
     import org.apache.spark.sql.graft.{Bridge, RelationBridge}
-    while (true) {
-      val prior = currentManifest(spark, root).getOrElse(
+    commitLoop(spark, root, "mergeInto", Some(Token(token, Some(tokenStream))),
+        ()) { a =>
+      val prior = a.prior.getOrElse(
         throw new IllegalStateException(s"no manifest table at $root"))
-      if (prior.lastBatches.get(tokenStream).contains(token)) return
       checkSchemaCompatible(prior, schema, "MERGE INTO", allowAdd = false)
       val key = prior.keyColumn
       require(key.nonEmpty, s"table at $root records no key column")
@@ -3271,8 +3235,6 @@ object ManifestTable {
           "comparator-holding mapping instead")
       val n = prior.numBuckets
       val bounds = prior.rangeBounds
-      val attempt = newAttemptId()
-      val version = prior.version + 1
       val keyType = schema(key).dataType
 
       // 1. ONE bounded job over the slim source-key projection answers
@@ -3401,23 +3363,12 @@ object ManifestTable {
       }
       val outDf = RelationBridge.ofRows(spark, Project(outProj, kept))
 
-      // 5. write the touched buckets + atomic manifest swap — the
-      //    delete/merge commit skeleton (losers clean their attempt
-      //    dirs and recompute against the new state)
+      // 5. write the touched buckets; the commit loop swaps the manifest
       val written = writeBuckets(outDf,
-        leafExpr(n, bounds, prior.splits, col(key)), key, root,
-        s"v$version-$attempt", math.max(touched.size, 1), seq = version,
-        colMap = prior.colMap)
-      if (tryCommitManifest(spark, root, Manifest(version, n,
-          untouched ++ written,
-          prior.lastBatches + (tokenStream -> token),
-          prior.lastDelete, attempt, key, prior.keyExpr,
-          prior.lastCompact, bounds,
-          recordableSchema(Some(prior), schema).json,
-          udfKey = prior.udfKey, clusterCol = prior.clusterCol,
-          colMap = prior.colMap, splits = prior.splits)))
-        return
-      cleanupAttempt(spark, root, version, attempt)
+        leafExpr(n, bounds, prior.splits, col(key)), key, root, a.dir,
+        math.max(touched.size, 1), seq = a.version, colMap = prior.colMap)
+      Right((prior.copy(entries = untouched ++ written,
+        schemaJson = recordableSchema(a.prior, schema).json), ()))
     }
   }
   // scalastyle:on method.length
@@ -3442,14 +3393,10 @@ object ManifestTable {
       token: Long,
       keyComparator: org.apache.spark.sql.Column => org.apache.spark.sql.Column =
         identity,
-      newRangeBounds: Seq[String] = Nil): Unit = {
-    while (true) {
-      val prior = currentManifest(spark, root).getOrElse(
-        throw new IllegalStateException(s"no table at $root"))
-      if (prior.lastDelete.contains(token)) return
+      newRangeBounds: Seq[String] = Nil): Unit =
+    commitLoop(spark, root, "rebucket", Some(Token(token, None)), ()) { a =>
+      val prior = a.table(root)
       checkSchemaCompatible(prior, schema, "rebucket", allowAdd = true)
-      val attempt = newAttemptId()
-      val version = prior.version + 1
       val all = readManifestState(spark, root, schema, Some(prior))
       val cmp = effectiveKey(prior, keyComparator)
       // Rebucketing a table re-lays it out under the new count as a
@@ -3462,17 +3409,13 @@ object ManifestTable {
             s"${newRangeBounds.size}")
       val bucket = bucketExpr(newNumBuckets, newRangeBounds,
         cmp(col(keyColumn)))
-      val written = writeBuckets(all, bucket, keyColumn, root,
-        s"v$version-$attempt", newNumBuckets, cmp, seq = version,
-        colMap = prior.colMap)
-      if (tryCommitManifest(spark, root, Manifest(version, newNumBuckets,
-          written, prior.lastBatches, Some(token), attempt, keyColumn,
-          prior.keyExpr, prior.lastCompact, newRangeBounds,
-          prior.schemaJson, prior.udfKey, colMap = prior.colMap)))
-        return // rebucket re-lays out whole: clusterCol + splits reset
-      cleanupAttempt(spark, root, version, attempt)
+      val written = writeBuckets(all, bucket, keyColumn, root, a.dir,
+        newNumBuckets, cmp, seq = a.version, colMap = prior.colMap)
+      // rebucket re-lays out the whole table: clusterCol + splits reset
+      Right((prior.copy(numBuckets = newNumBuckets, entries = written,
+        keyColumn = keyColumn, rangeBounds = newRangeBounds,
+        clusterCol = "", splits = Nil), ()))
     }
-  }
 
   /** ONLINE BUCKET SPLIT — bucket-count evolution without [[rebucket]]'s
     * full-table rewrite. The one cost class that otherwise grows with
@@ -3512,25 +3455,14 @@ object ManifestTable {
       tokenStream: Option[String] = None,
       commitOnNoSplit: Boolean = true): Seq[Int] = {
     require(maxBytes > 0, "maxBytes must be > 0")
-    while (true) {
-      val prior = currentManifest(spark, root).getOrElse(
-        throw new IllegalStateException(s"no table at $root"))
-      val replayed = tokenStream match {
-        case Some(s) => prior.lastBatches.get(s).contains(token)
-        case None => prior.lastDelete.contains(token)
-      }
-      if (replayed) return Nil
+    commitLoop(spark, root, "splitBuckets", Some(Token(token, tokenStream)),
+        Seq.empty[Int]) { a =>
+      val prior = a.table(root)
       checkSchemaCompatible(prior, schema, "splitBuckets", allowAdd = true)
       val keyColumn = prior.keyColumn
       require(keyColumn.nonEmpty,
         s"table at $root records no key column — splitting needs the " +
           "key to re-address rows")
-      val attempt = newAttemptId()
-      val version = prior.version + 1
-      val batches = tokenStream.fold(prior.lastBatches)(s =>
-        prior.lastBatches + (s -> token))
-      val deleteToken =
-        if (tokenStream.isEmpty) Some(token) else prior.lastDelete
       val byLeaf = prior.entries.groupBy(_.bucket)
       // threshold on RECORDED bytes (every format-4+ writer records
       // them); a leaf whose entries predate byte recording reads 0 and
@@ -3538,14 +3470,7 @@ object ManifestTable {
       val oversize: Map[Int, Long] = byLeaf.view
         .mapValues(_.map(_.bytes).sum).filter(_._2 > maxBytes).toMap
       if (oversize.isEmpty) {
-        if (!commitOnNoSplit) return Nil
-        if (tryCommitManifest(spark, root, Manifest(version,
-            prior.numBuckets, prior.entries, batches, deleteToken,
-            attempt, keyColumn, prior.keyExpr, prior.lastCompact,
-            prior.rangeBounds, prior.schemaJson, prior.udfKey,
-            clusterCol = prior.clusterCol, colMap = prior.colMap,
-            splits = prior.splits)))
-          return Nil
+        if (commitOnNoSplit) Right((prior, Nil)) else Left(Nil)
       } else {
         // per oversize leaf: the 2^k fanout that lands children back
         // under maxBytes, recorded as the leaf's full k-level subtree
@@ -3584,20 +3509,12 @@ object ManifestTable {
           touchedEntries, keyColumn, cmp)
         val bucket = leafExpr(prior.numBuckets, prior.rangeBounds,
           newSplits, cmp(col(keyColumn)))
-        val written = writeBuckets(fragment, bucket, keyColumn, root,
-          s"v$version-$attempt", fanoutTotal, cmp, seq = version,
-          colMap = prior.colMap)
-        if (tryCommitManifest(spark, root, Manifest(version,
-            prior.numBuckets, untouched ++ written, batches, deleteToken,
-            attempt, keyColumn, prior.keyExpr, prior.lastCompact,
-            prior.rangeBounds, prior.schemaJson, prior.udfKey,
-            clusterCol = prior.clusterCol, colMap = prior.colMap,
-            splits = newSplits)))
-          return oversize.keys.toSeq.sorted
-        cleanupAttempt(spark, root, version, attempt)
+        val written = writeBuckets(fragment, bucket, keyColumn, root, a.dir,
+          fanoutTotal, cmp, seq = a.version, colMap = prior.colMap)
+        Right((prior.copy(entries = untouched ++ written, splits = newSplits),
+          oversize.keys.toSeq.sorted))
       }
     }
-    Nil // unreachable
   }
 
   /** The schema a write onto an EXISTING table may record: per-column
@@ -3640,23 +3557,14 @@ object ManifestTable {
   def evolveSchema(
       spark: SparkSession,
       root: String,
-      newSchema: org.apache.spark.sql.types.StructType): Unit = {
-    while (true) {
-      val prior = currentManifest(spark, root).getOrElse(
-        throw new IllegalStateException(s"no table at $root"))
+      newSchema: org.apache.spark.sql.types.StructType): Unit =
+    commitLoop(spark, root, "evolveSchema", None, ()) { a =>
+      val prior = a.table(root)
       checkSchemaCompatible(prior, newSchema, "evolveSchema",
         allowAdd = true)
-      if (schemaOf(prior).contains(newSchema)) return // already recorded
-      if (tryCommitManifest(spark, root, Manifest(prior.version + 1,
-          prior.numBuckets, prior.entries, prior.lastBatches,
-          prior.lastDelete, newAttemptId(), prior.keyColumn,
-          prior.keyExpr, prior.lastCompact, prior.rangeBounds,
-          newSchema.json, prior.udfKey, clusterCol = prior.clusterCol,
-          colMap = prior.colMap, splits = prior.splits)))
-        return
-      // OCC loss: metadata-only, nothing to clean — retry on new state
+      if (schemaOf(prior).contains(newSchema)) Left(()) // already recorded
+      else Right((prior.copy(schemaJson = newSchema.json), ()))
     }
-  }
 
   /** COLUMN RENAME as a METADATA-ONLY commit (the Delta column-mapping
     * trick, name-mapping flavor): the column keeps its PHYSICAL on-file
@@ -3708,10 +3616,9 @@ object ManifestTable {
   def dropColumn(
       spark: SparkSession,
       root: String,
-      name: String): Unit = {
-    while (true) {
-      val prior = currentManifest(spark, root).getOrElse(
-        throw new IllegalStateException(s"no table at $root"))
+      name: String): Unit =
+    commitLoop(spark, root, "dropColumn", None, ()) { a =>
+      val prior = a.table(root)
       val schema = schemaOf(prior).getOrElse(
         throw new IllegalArgumentException(
           s"table at $root records no schema (pre-format-7) — run a " +
@@ -3748,16 +3655,8 @@ object ManifestTable {
       val phys = physicalOf(prior, name)
       val cmap = (prior.colMap.filterNot(_._1 == name) ++
         Seq(s"#drop:$phys" -> phys)).sortBy(_._1)
-      if (tryCommitManifest(spark, root, Manifest(prior.version + 1,
-          prior.numBuckets, prior.entries, prior.lastBatches,
-          prior.lastDelete, newAttemptId(), prior.keyColumn,
-          prior.keyExpr, prior.lastCompact, prior.rangeBounds,
-          newSchema.json, prior.udfKey, clusterCol = prior.clusterCol,
-          colMap = cmap, splits = prior.splits)))
-        return
-      // OCC loss: metadata-only, nothing to clean — retry on new state
+      Right((prior.copy(schemaJson = newSchema.json, colMap = cmap), ()))
     }
-  }
 
   /** The SAFE type widenings: every old file's values read back EXACTLY
     * under the wider type (Spark's parquet readers, vectorized and
@@ -3804,10 +3703,9 @@ object ManifestTable {
       spark: SparkSession,
       root: String,
       name: String,
-      to: org.apache.spark.sql.types.DataType): Unit = {
-    while (true) {
-      val prior = currentManifest(spark, root).getOrElse(
-        throw new IllegalStateException(s"no table at $root"))
+      to: org.apache.spark.sql.types.DataType): Unit =
+    commitLoop(spark, root, "widenColumn", None, ()) { a =>
+      val prior = a.table(root)
       val schema = schemaOf(prior).getOrElse(
         throw new IllegalArgumentException(
           s"table at $root records no schema (pre-format-7) — run a " +
@@ -3817,57 +3715,51 @@ object ManifestTable {
         s"no column '$name' in the recorded schema " +
           s"(${schema.fieldNames.mkString(", ")})")
       val from = schema.fields(idx).dataType
-      if (from == to) return // already wide enough: no-op, no commit
-      require(widensTo(from, to),
-        s"widenColumn('$name'): ${from.sql} -> ${to.sql} is not a safe " +
-          "widening (allowed: integral up-casts, float -> double, " +
-          "decimal precision increase at the same scale)")
-      require(name != prior.keyColumn,
-        s"cannot widen the key column '$name': bucket addressing " +
-          "hashes the native type, so existing rows would land in " +
-          "buckets no probe finds — re-key into a new table")
-      val hasBloom = {
-        val dirs = committedAdditiveDirs(spark, root, "bloom")
-        dirs.nonEmpty && spark.read
-          .schema(org.apache.spark.sql.types.StructType(Seq(
-            org.apache.spark.sql.types.StructField("column",
-              org.apache.spark.sql.types.StringType))))
-          .parquet(dirs: _*)
-          .filter(col("column") === name).limit(1).count() > 0
+      if (from == to) Left(()) // already wide enough: no-op, no commit
+      else {
+        require(widensTo(from, to),
+          s"widenColumn('$name'): ${from.sql} -> ${to.sql} is not a safe " +
+            "widening (allowed: integral up-casts, float -> double, " +
+            "decimal precision increase at the same scale)")
+        require(name != prior.keyColumn,
+          s"cannot widen the key column '$name': bucket addressing " +
+            "hashes the native type, so existing rows would land in " +
+            "buckets no probe finds — re-key into a new table")
+        val hasBloom = {
+          val dirs = committedAdditiveDirs(spark, root, "bloom")
+          dirs.nonEmpty && spark.read
+            .schema(org.apache.spark.sql.types.StructType(Seq(
+              org.apache.spark.sql.types.StructField("column",
+                org.apache.spark.sql.types.StringType))))
+            .parquet(dirs: _*)
+            .filter(col("column") === name).limit(1).count() > 0
+        }
+        require(!hasBloom,
+          s"cannot widen '$name': committed bloom sidecar rows cover it, " +
+            "and bloom filters hash the NATIVE type — probes under the " +
+            "widened type would prove present values absent. Rebuild the " +
+            "bloom sidecar after widening (drop the table's bloom/ dir " +
+            "while no reader runs, then buildBlooms)")
+        // a REGISTERED secondary index stores the column at its native
+        // type: after a widen, every refresh would fail the index
+        // table's exact-type schema check forever (warn-only under
+        // declared maintenance) while direct lookupBy callers silently
+        // read a frozen pre-widen snapshot — refuse loudly instead
+        val indexed = SecondaryIndex
+          .registered(spark, root, schema)
+          .filter(_.valueCols.contains(name))
+          .map(_.indexRoot)
+        require(indexed.isEmpty,
+          s"cannot widen '$name': registered secondary index(es) " +
+            s"${indexed.mkString(", ")} store it at the native type and " +
+            "would be permanently stranded — delete the index table " +
+            "(its registration lapses), widen, then re-create it")
+        val newSchema = org.apache.spark.sql.types.StructType(
+          schema.fields.map(f =>
+            if (f.name == name) f.copy(dataType = to) else f))
+        Right((prior.copy(schemaJson = newSchema.json), ()))
       }
-      require(!hasBloom,
-        s"cannot widen '$name': committed bloom sidecar rows cover it, " +
-          "and bloom filters hash the NATIVE type — probes under the " +
-          "widened type would prove present values absent. Rebuild the " +
-          "bloom sidecar after widening (drop the table's bloom/ dir " +
-          "while no reader runs, then buildBlooms)")
-      // a REGISTERED secondary index stores the column at its native
-      // type: after a widen, every refresh would fail the index
-      // table's exact-type schema check forever (warn-only under
-      // declared maintenance) while direct lookupBy callers silently
-      // read a frozen pre-widen snapshot — refuse loudly instead
-      val indexed = SecondaryIndex
-        .registered(spark, root, schema)
-        .filter(_.valueCols.contains(name))
-        .map(_.indexRoot)
-      require(indexed.isEmpty,
-        s"cannot widen '$name': registered secondary index(es) " +
-          s"${indexed.mkString(", ")} store it at the native type and " +
-          "would be permanently stranded — delete the index table " +
-          "(its registration lapses), widen, then re-create it")
-      val newSchema = org.apache.spark.sql.types.StructType(
-        schema.fields.map(f =>
-          if (f.name == name) f.copy(dataType = to) else f))
-      if (tryCommitManifest(spark, root, Manifest(prior.version + 1,
-          prior.numBuckets, prior.entries, prior.lastBatches,
-          prior.lastDelete, newAttemptId(), prior.keyColumn,
-          prior.keyExpr, prior.lastCompact, prior.rangeBounds,
-          newSchema.json, prior.udfKey, clusterCol = prior.clusterCol,
-          colMap = prior.colMap, splits = prior.splits)))
-        return
-      // OCC loss: metadata-only, nothing to clean — retry on new state
     }
-  }
 
   def renameColumn(
       spark: SparkSession,
@@ -3875,9 +3767,8 @@ object ManifestTable {
       from: String,
       to: String): Unit = {
     require(from != to, s"rename to the same name '$from' is a no-op")
-    while (true) {
-      val prior = currentManifest(spark, root).getOrElse(
-        throw new IllegalStateException(s"no table at $root"))
+    commitLoop(spark, root, "renameColumn", None, ()) { a =>
+      val prior = a.table(root)
       val schema = schemaOf(prior).getOrElse(
         throw new IllegalArgumentException(
           s"table at $root records no schema (pre-format-7) — run a " +
@@ -3931,16 +3822,11 @@ object ManifestTable {
               s"unexpected keyExpr rewrite plan: $other")
           }
         }
-      if (tryCommitManifest(spark, root, Manifest(prior.version + 1,
-          prior.numBuckets, prior.entries, prior.lastBatches,
-          prior.lastDelete, newAttemptId(),
-          if (prior.keyColumn == from) to else prior.keyColumn,
-          newKeyExpr, prior.lastCompact, prior.rangeBounds,
-          newSchema.json, prior.udfKey,
-          clusterCol = renameClusterCol(prior.clusterCol, from, to),
-          colMap = cmap, splits = prior.splits)))
-        return
-      // OCC loss: metadata-only, nothing to clean — retry on new state
+      Right((prior.copy(
+        keyColumn = if (prior.keyColumn == from) to else prior.keyColumn,
+        keyExpr = newKeyExpr, schemaJson = newSchema.json,
+        clusterCol = renameClusterCol(prior.clusterCol, from, to),
+        colMap = cmap), ()))
     }
   }
 
@@ -3983,27 +3869,17 @@ object ManifestTable {
     require(clusterCol != keyColumn,
       "clusterBy is for NON-key columns (the key layout already " +
         "prunes key predicates; use rangeBounds for a key-range layout)")
-    while (true) {
-      val prior = currentManifest(spark, root).getOrElse(
-        throw new IllegalStateException(s"no table at $root"))
-      if (prior.lastDelete.contains(token)) return
+    commitLoop(spark, root, "clusterBy", Some(Token(token, None)), ()) { a =>
+      val prior = a.table(root)
       checkSchemaCompatible(prior, schema, "clusterBy", allowAdd = true)
-      val attempt = newAttemptId()
-      val version = prior.version + 1
       val all = readManifestState(spark, root, schema, Some(prior))
       val cmp = effectiveKey(prior, keyComparator)
       val bucket = leafExpr(prior, cmp(col(keyColumn)))
-      val written = writeBuckets(all, bucket, keyColumn, root,
-        s"v$version-$attempt", prior.numBuckets * filesPerBucket, cmp,
-        seq = version, colMap = prior.colMap, cluster = Some(col(clusterCol)))
-      if (tryCommitManifest(spark, root, Manifest(version,
-          prior.numBuckets, written, prior.lastBatches, Some(token),
-          attempt, keyColumn, prior.keyExpr, prior.lastCompact,
-          prior.rangeBounds, prior.schemaJson, prior.udfKey,
-          clusterCol = clusterCol, colMap = prior.colMap,
-          splits = prior.splits)))
-        return
-      cleanupAttempt(spark, root, version, attempt)
+      val written = writeBuckets(all, bucket, keyColumn, root, a.dir,
+        prior.numBuckets * filesPerBucket, cmp, seq = a.version,
+        colMap = prior.colMap, cluster = Some(col(clusterCol)))
+      Right((prior.copy(entries = written, keyColumn = keyColumn,
+        clusterCol = clusterCol), ()))
     }
   }
 
@@ -4061,29 +3937,19 @@ object ManifestTable {
     require(bits >= 1 && bits * clusterCols.size <= 63,
       s"$bits bits x ${clusterCols.size} columns exceeds a long's " +
         "63 interleavable bits")
-    while (true) {
-      val prior = currentManifest(spark, root).getOrElse(
-        throw new IllegalStateException(s"no table at $root"))
-      if (prior.lastDelete.contains(token)) return
+    commitLoop(spark, root, "zOrderBy", Some(Token(token, None)), ()) { a =>
+      val prior = a.table(root)
       checkSchemaCompatible(prior, schema, "zOrderBy", allowAdd = true)
-      val attempt = newAttemptId()
-      val version = prior.version + 1
       val all = readManifestState(spark, root, schema, Some(prior))
       val z = zExprOf(all, clusterCols,
         prior.entries.map(_.rows).sum, sampleRows, bits, seed = token)
       val cmp = effectiveKey(prior, keyComparator)
       val bucket = leafExpr(prior, cmp(col(keyColumn)))
-      val written = writeBuckets(all, bucket, keyColumn, root,
-        s"v$version-$attempt", prior.numBuckets * filesPerBucket, cmp,
-        seq = version, colMap = prior.colMap, cluster = Some(z))
-      if (tryCommitManifest(spark, root, Manifest(version,
-          prior.numBuckets, written, prior.lastBatches, Some(token),
-          attempt, keyColumn, prior.keyExpr, prior.lastCompact,
-          prior.rangeBounds, prior.schemaJson, prior.udfKey,
-          clusterCol = s"zorder(${clusterCols.mkString(",")})",
-          colMap = prior.colMap, splits = prior.splits)))
-        return
-      cleanupAttempt(spark, root, version, attempt)
+      val written = writeBuckets(all, bucket, keyColumn, root, a.dir,
+        prior.numBuckets * filesPerBucket, cmp, seq = a.version,
+        colMap = prior.colMap, cluster = Some(z))
+      Right((prior.copy(entries = written, keyColumn = keyColumn,
+        clusterCol = s"zorder(${clusterCols.mkString(",")})"), ()))
     }
   }
 
@@ -4170,14 +4036,9 @@ object ManifestTable {
       commitOnNoDrift: Boolean = true): Seq[Int] = {
     require(filesPerBucket >= 1, "filesPerBucket must be >= 1")
     require(minDriftFiles >= 1, "minDriftFiles must be >= 1")
-    while (true) {
-      val prior = currentManifest(spark, root).getOrElse(
-        throw new IllegalStateException(s"no table at $root"))
-      val replayed = tokenStream match {
-        case Some(s) => prior.lastBatches.get(s).contains(token)
-        case None => prior.lastDelete.contains(token)
-      }
-      if (replayed) return Nil
+    commitLoop(spark, root, "recluster", Some(Token(token, tokenStream)),
+        Seq.empty[Int]) { a =>
+      val prior = a.table(root)
       checkSchemaCompatible(prior, schema, "recluster", allowAdd = true)
       require(prior.clusterCol.nonEmpty,
         s"table at $root records no cluster layout — bootstrap with " +
@@ -4191,26 +4052,13 @@ object ManifestTable {
       clusterCols.foreach(c => require(schema.fieldNames.contains(c),
         s"recorded cluster column $c not in the caller's schema"))
       val keyColumn = prior.keyColumn
-      val attempt = newAttemptId()
-      val version = prior.version + 1
-      val batches = tokenStream.fold(prior.lastBatches)(s =>
-        prior.lastBatches + (s -> token))
-      val deleteToken =
-        if (tokenStream.isEmpty) Some(token) else prior.lastDelete
       val drifted: Set[Int] = prior.entries.groupBy(_.bucket)
         .collect { case (b, es)
           if es.count(!_.sorted) >= minDriftFiles => b }.toSet
       if (drifted.isEmpty) {
-        if (!commitOnNoDrift) return Nil
         // no drift: commit the token so replays no-op (the deleteWhere
         // miss-path discipline)
-        if (tryCommitManifest(spark, root, Manifest(version,
-            prior.numBuckets, prior.entries, batches,
-            deleteToken, attempt, keyColumn, prior.keyExpr,
-            prior.lastCompact, prior.rangeBounds, prior.schemaJson,
-            prior.udfKey, clusterCol = prior.clusterCol,
-            colMap = prior.colMap, splits = prior.splits)))
-          return Nil
+        if (commitOnNoDrift) Right((prior, Nil)) else Left(Nil)
       } else {
         val (touchedEntries, untouched) =
           prior.entries.partition(e => drifted(e.bucket))
@@ -4223,20 +4071,13 @@ object ManifestTable {
             touchedEntries.map(_.rows).sum, sampleRows, bits,
             seed = token)
         val bucket = leafExpr(prior, cmp(col(keyColumn)))
-        val written = writeBuckets(frag, bucket, keyColumn, root,
-          s"v$version-$attempt", drifted.size * filesPerBucket, cmp,
-          seq = version, colMap = prior.colMap, cluster = Some(cluster))
-        if (tryCommitManifest(spark, root, Manifest(version,
-            prior.numBuckets, untouched ++ written, batches,
-            deleteToken, attempt, keyColumn, prior.keyExpr,
-            prior.lastCompact, prior.rangeBounds, prior.schemaJson,
-            prior.udfKey, clusterCol = prior.clusterCol,
-            colMap = prior.colMap, splits = prior.splits)))
-          return drifted.toSeq.sorted
-        cleanupAttempt(spark, root, version, attempt)
+        val written = writeBuckets(frag, bucket, keyColumn, root, a.dir,
+          drifted.size * filesPerBucket, cmp, seq = a.version,
+          colMap = prior.colMap, cluster = Some(cluster))
+        Right((prior.copy(entries = untouched ++ written),
+          drifted.toSeq.sorted))
       }
     }
-    Nil // unreachable
   }
 
   /** Rename a column through a recorded cluster claim: a plain
@@ -4291,15 +4132,10 @@ object ManifestTable {
       root: String,
       toVersion: Long,
       token: Long,
-      tokenStream: Option[String] = None): Unit = {
-    while (true) {
-      val prior = currentManifest(spark, root).getOrElse(
-        throw new IllegalStateException(s"no table at $root"))
-      val replayed = tokenStream match {
-        case Some(s) => prior.lastBatches.get(s).contains(token)
-        case None => prior.lastDelete.contains(token)
-      }
-      if (replayed) return
+      tokenStream: Option[String] = None): Unit =
+    commitLoop(spark, root, "restore", Some(Token(token, tokenStream)),
+        ()) { a =>
+      val prior = a.table(root)
       require(toVersion <= prior.version,
         s"cannot restore $root to v$toVersion: current is v${prior.version}")
       val target = readManifest(spark, root, toVersion)
@@ -4309,21 +4145,10 @@ object ManifestTable {
       // mis-describe; such tables predate restore anyway.
       require(target.format >= 8 || target.entries.isEmpty,
         s"restore target m$toVersion is format ${target.format} (< 8)")
-      val batches = tokenStream.fold(prior.lastBatches)(s =>
-        prior.lastBatches + (s -> token))
-      val deleteToken =
-        if (tokenStream.isEmpty) Some(token) else prior.lastDelete
-      if (tryCommitManifest(spark, root, Manifest(prior.version + 1,
-          target.numBuckets, target.entries, batches, deleteToken,
-          newAttemptId(), target.keyColumn, target.keyExpr,
-          prior.lastCompact, target.rangeBounds, target.schemaJson,
-          target.udfKey, clusterCol = target.clusterCol,
-          colMap = target.colMap, splits = target.splits)))
-        return
-      // nothing to clean on an OCC loss: restore writes no attempt
-      // artifacts, only the temp manifest tryCommitManifest removes
+      // the target's layout and schema, the current head's replay state
+      Right((target.copy(lastBatches = prior.lastBatches,
+        lastDelete = prior.lastDelete, lastCompact = prior.lastCompact), ()))
     }
-  }
 
   /** Per-bucket COMPACTION: folds every bucket carrying
     * `minFilesPerBucket` or more live files (a base plus accumulated
@@ -4356,51 +4181,36 @@ object ManifestTable {
         identity,
       tokenStream: Option[String] = None): Seq[FileEntry] = {
     require(minFilesPerBucket >= 2, "minFilesPerBucket must be >= 2")
-    while (true) {
-      val prior = currentManifest(spark, root).getOrElse(return Nil)
-      // An AUTOMATED caller (the autoMaintain hook) names its own
-      // stream and replays through `lastBatches(stream)` — the user's
-      // `lastCompact` token space stays untouched, so a hook token
-      // (the triggering commit's version) can never collide with a
-      // user compact token and silently no-op it as a "replay".
-      val replayed = tokenStream match {
-        case Some(s) => prior.lastBatches.get(s).contains(token)
-        case None => prior.lastCompact.contains(token)
-      }
-      if (replayed) return Nil
-      checkSchemaCompatible(prior, schema, "compact", allowAdd = true)
-      val byBucket = prior.entries.groupBy(_.bucket)
-      val (tiered, thin) =
-        byBucket.values.toSeq.partition(_.size >= minFilesPerBucket)
-      if (tiered.isEmpty) return Nil
-      val attempt = newAttemptId()
-      val version = prior.version + 1
-      val n = prior.numBuckets
-      // Bucket assignment must use the same comparator the layout was
-      // written with ([[effectiveKey]]): an identity-default compact on
-      // a keyExpr table would migrate rows to raw-key buckets, breaking
-      // every later pruned lookup/delete.
-      val cmp = effectiveKey(prior, keyComparator)
-      val fragment = reconciledRead(spark, root, schema, prior,
-        tiered.flatten, keyColumn, cmp)
-      val bucket = leafExpr(prior, cmp(col(keyColumn)))
-      val written = writeBuckets(fragment, bucket, keyColumn, root,
-        s"v$version-$attempt", tiered.size, cmp, seq = version,
-        colMap = prior.colMap)
-      val batches = tokenStream.fold(prior.lastBatches)(s =>
-        prior.lastBatches + (s -> token))
-      val compactToken =
-        if (tokenStream.isEmpty) Some(token) else prior.lastCompact
-      if (tryCommitManifest(spark, root, Manifest(version, n,
-          thin.flatten ++ written, batches, prior.lastDelete,
-          attempt, keyColumn, prior.keyExpr, compactToken,
-          prior.rangeBounds, prior.schemaJson, prior.udfKey,
-          clusterCol = prior.clusterCol, colMap = prior.colMap,
-          splits = prior.splits)))
-        return written
-      cleanupAttempt(spark, root, version, attempt)
+    // An AUTOMATED caller (the autoMaintain hook) names its own
+    // stream and replays through `lastBatches(stream)` — the user's
+    // `lastCompact` token space stays untouched, so a hook token
+    // (the triggering commit's version) can never collide with a
+    // user compact token and silently no-op it as a "replay".
+    commitLoop(spark, root, "compact",
+        Some(Token(token, tokenStream, compact = true)),
+        Seq.empty[FileEntry]) {
+      case Attempt(None, _, _) => Left(Nil)
+      case a @ Attempt(Some(prior), _, _) =>
+        checkSchemaCompatible(prior, schema, "compact", allowAdd = true)
+        val byBucket = prior.entries.groupBy(_.bucket)
+        val (tiered, thin) =
+          byBucket.values.toSeq.partition(_.size >= minFilesPerBucket)
+        if (tiered.isEmpty) Left(Nil)
+        else {
+          // Bucket assignment must use the same comparator the layout was
+          // written with ([[effectiveKey]]): an identity-default compact on
+          // a keyExpr table would migrate rows to raw-key buckets, breaking
+          // every later pruned lookup/delete.
+          val cmp = effectiveKey(prior, keyComparator)
+          val fragment = reconciledRead(spark, root, schema, prior,
+            tiered.flatten, keyColumn, cmp)
+          val bucket = leafExpr(prior, cmp(col(keyColumn)))
+          val written = writeBuckets(fragment, bucket, keyColumn, root, a.dir,
+            tiered.size, cmp, seq = a.version, colMap = prior.colMap)
+          Right((prior.copy(entries = thin.flatten ++ written,
+            keyColumn = keyColumn), written))
+        }
     }
-    Nil // unreachable
   }
 
   /** CHANGE FEED: row-level changes between two committed versions,
@@ -4793,11 +4603,8 @@ object ManifestTable {
           deleteTag(spark, srcRoot, cloneTagName(dstRoot))
       }
     val attempt = newAttemptId()
-    val cloneM = Manifest(0L, m.numBuckets,
-      extEntries, m.lastBatches, m.lastDelete, attempt,
-      m.keyColumn, m.keyExpr, m.lastCompact, m.rangeBounds,
-      m.schemaJson, m.udfKey, clusterCol = m.clusterCol,
-      colMap = m.colMap, splits = m.splits)
+    val cloneM = m.copy(version = 0L, entries = extEntries, sideId = attempt,
+      format = WriteFormat)
     val committed =
       try tryCommitManifest(spark, dstRoot, cloneM)
       catch { case e: Throwable => unpin(); throw e }

@@ -1600,4 +1600,25 @@ class ManifestTableSpec extends SparkSpec {
     }
     assert(e.getMessage.contains("delta"))
   }
+
+  test("a committed manifest reads back equal to the committed value, " +
+      "every field set") {
+    val root = freshRoot("manifest_roundtrip")
+    val m = ManifestTable.Manifest(0L, 3,
+      Seq(
+        ManifestTable.FileEntry(1, 5L, "a\tb", "z\n", "data/v0-x/f1.parquet",
+          seq = 0L, bytes = 77L, named = true, minZ = "1", maxZ = "9",
+          nullKeys = false, sorted = true, tomb = true),
+        ManifestTable.FileEntry(2, 1L, "k", "k",
+          "ext:file:/elsewhere/f2.parquet", seq = 3L)),
+      lastBatches = Map("s,1:x" -> 4L, "t" -> 2L), lastDelete = Some(7L),
+      sideId = "0123456789ab", keyColumn = "id key",
+      keyExpr = "lower(`id key`)", lastCompact = Some(9L),
+      rangeBounds = Seq("b,", "m"), schemaJson = schema.json, udfKey = true,
+      clusterCol = "zorder(a,b)",
+      colMap = Seq("#drop:x" -> "x", "name" -> "n0"),
+      format = ManifestTable.WriteFormat, splits = Seq((1, 0), (5, 1)))
+    assert(ManifestTable.tryCommitManifest(spark, root, m))
+    assert(ManifestTable.readManifest(spark, root, 0L) == m)
+  }
 }
